@@ -381,22 +381,28 @@ def temperature_mix(
     addition summed in engine-specific order), so each √n is floor-
     quantized to 2⁻²⁰ units and the sum runs in EXACT integers — both
     engines see the identical denominator. One tiny group-count
-    aggregate (broadcast back), then a pure per-row filter — no shuffle
-    of the data rows at all."""
+    aggregate, coalesced to ONE partition (SCALING.md, "Group-grain
+    tables ride one partition") so its whole-frame totals window needs
+    no SinglePartition exchange, broadcast back; then a pure per-row
+    filter — no shuffle of the data rows at all."""
     if budget_num <= 0 or budget_den <= 0:
         raise ValueError("budget fraction must be positive")
     q20 = 1_048_576  # 2^20
-    c = df.groupBy(F.col(group_col)).agg(F.count("*").alias("__n"))
     # Normalizer totals ride a whole-frame window over the GROUP-grain
     # count table (≤ #groups rows by construction — bounded summary
     # grain): the previous agg→broadcast→crossJoin shape evaluated the
     # group-count aggregation twice (once building the totals broadcast,
     # once for the probability side). Integer sums — identical values.
+    # The coalesce(1) right after the aggregate (partial counts run
+    # before the exchange, so its one task reads at most
+    # shuffle-partitions x #groups rows) already satisfies the window's
+    # whole-frame requirement: no SinglePartition exchange.
     # CONTRACT (r16 ADVICE #3, the ks_group_drift convention): group_col
     # is a small-cardinality mixing dimension (language, source, shard)
     # — the unpartitioned window funnels the #groups-row count table
     # through one task, which is the right trade at that grain; a
     # data-grain group column would need the agg+broadcast shape back.
+    c = df.groupBy(F.col(group_col)).agg(F.count("*").alias("__n")).coalesce(1)
     from pyspark.sql import Window
 
     wall = Window.partitionBy()

@@ -1701,7 +1701,17 @@ def ks_group_drift(
     gap = one division per side over exact
     BIGINTs; max() order-independent. Output: one row per group
     (group, n_g, n_total, d_e6), d vs the global distribution including the group
-    itself (self-inclusive convention, documented)."""
+    itself (self-inclusive convention, documented), sorted by group
+    with the NULL group first.
+
+    The G-row tables ride ONE partition (SCALING.md, "Group-grain
+    tables ride one partition"): the group table is coalesced after
+    its aggregate, so the corpus total n_total is a whole-frame window
+    over G rows in place of a separate SinglePartition aggregate and
+    its broadcast; the G-row output is coalesced the same way and
+    sorted within that one partition in place of a global ORDER BY
+    (a RangePartitioner sampling job plus a range shuffle for G
+    rows)."""
     from pyspark.sql import Window
 
     from hadoop_fcfs_spark.caching import waypoint
@@ -1713,35 +1723,47 @@ def ks_group_drift(
         .groupBy("__g", "__v")
         .agg(F.count("*").cast("long").alias("__c"))
     )
-    groups = gg.groupBy("__g").agg(F.sum("__c").alias("__ng"))
+    # Σ_g n_g over the groups (NULL group included) == the non-NULL
+    # value count. __gi is a non-NULL stand-in for the group key: the
+    # chunked cumulative joins its offsets back on the group key, and a
+    # NULL key would never match there.
+    groups = (
+        gg.groupBy("__g")
+        .agg(F.sum("__c").alias("__ng"))
+        .coalesce(1)
+        .withColumn("__nn", F.sum("__ng").over(Window.partitionBy()))
+        .withColumn("__gi", F.row_number().over(Window.orderBy("__g")))
+    )
     # Value-grain stats carry each value's per-group counts IN-ROW (a
-    # ≤ G-entry map), so the dense grid is a broadcast-attach of the
-    # G-row group table + one map lookup per (value, group) cell —
-    # the former gv⨯groups LEFT JOIN gg on (g, v) and its two hash
-    # exchanges (plus the join stage) are gone; same exact integer
-    # counts (a missing map entry IS the left join's unmatched NULL,
-    # coalesced to 0, and NULL groups zero out under both shapes —
-    # lookup by NULL key yields NULL, as NULL = NULL never matched).
+    # ≤ G-entry map, plus the NULL group's count beside it, as a map
+    # key cannot be NULL), so the dense grid is a broadcast-attach of
+    # the G-row group table + one lookup per (value, group) cell — the
+    # former gv⨯groups LEFT JOIN gg on (g, v) and its two hash exchanges
+    # (plus the join stage) are gone; same exact integer counts (a
+    # missing entry IS the left join's unmatched NULL, coalesced to 0).
     gv = waypoint(
         gg.groupBy("__v").agg(
-            F.sum("__c").alias("__cc"),
             F.map_from_entries(
                 F.filter(
                     F.collect_list(F.struct(F.col("__g"), F.col("__c"))),
                     lambda e: e["__g"].isNotNull(),
                 )
             ).alias("__m"),
+            F.sum(F.when(F.col("__g").isNull(), F.col("__c"))).alias("__cn"),
         )
     )
-    nn = gv.agg(F.sum("__cc").alias("__nn"))
     dense = (
-        gv.select("__v", "__m")
-        .crossJoin(F.broadcast(groups))
+        gv.crossJoin(F.broadcast(groups))
         .withColumn(
             "__c",
-            F.coalesce(F.try_element_at(F.col("__m"), F.col("__g")), F.lit(0)),
+            F.coalesce(
+                F.when(F.col("__g").isNull(), F.col("__cn")).otherwise(
+                    F.try_element_at(F.col("__m"), F.col("__g"))
+                ),
+                F.lit(0),
+            ),
         )
-        .drop("__m")
+        .drop("__m", "__cn")
     )
     # chunk = truncation-monotone value bucket (cast-to-long truncation
     # and arithmetic shiftright are both non-decreasing in __v), so the
@@ -1749,7 +1771,7 @@ def ks_group_drift(
     # group — never a whole-group window task
     dcum = chunked_running_sum(
         dense,
-        ["__g"],
+        ["__gi"],
         F.shiftright(F.col("__v").cast("long"), 8),
         ["__v"],
         "__c",
@@ -1770,14 +1792,14 @@ def ks_group_drift(
     )
     return (
         dcum.withColumn("__gcm", gcm)
-        .crossJoin(F.broadcast(nn))
         .groupBy(F.col("__g").alias(group_col))
         .agg(
             F.max("__ng").cast("long").alias("n_g"),
             F.max("__nn").cast("long").alias("n_total"),
             F.floor(F.max(gap) * 1_000_000).cast("long").alias("d_e6"),
         )
-        .orderBy(group_col)
+        .coalesce(1)
+        .sortWithinPartitions(group_col)
     )
 
 

@@ -3385,7 +3385,7 @@ def corpus_pipeline_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
 # automatically, not by hand-copy).
 _KS_DRIFT_CTES = """gg AS (
       SELECT source AS g, n_chars AS v, CAST(COUNT(*) AS BIGINT) AS c
-      FROM documents GROUP BY 1, 2
+      FROM documents WHERE n_chars IS NOT NULL GROUP BY 1, 2
     ),
     grp AS (SELECT g, SUM(c) AS ng FROM gg GROUP BY 1),
     gv AS (SELECT v, SUM(c) AS cc FROM gg GROUP BY 1),
@@ -3398,7 +3398,7 @@ _KS_DRIFT_CTES = """gg AS (
     dense AS (
       SELECT grp.g, gv.v, grp.ng, COALESCE(gg.c, 0) AS c
       FROM gv CROSS JOIN grp
-      LEFT JOIN gg ON gg.g = grp.g AND gg.v = gv.v
+      LEFT JOIN gg ON gg.g IS NOT DISTINCT FROM grp.g AND gg.v = gv.v
     ),
     dcum AS (
       SELECT g, v, ng,
@@ -3577,9 +3577,11 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(source x global-value-grain) grid - a group's ECDF is flat "
     "where it has no mass and the sup can land exactly there; "
     "group-own-points-only evaluation understates D. Dense per-group "
-    "cumulatives via chunked_running_sum, global via "
-    "global_running_sum; exact BIGINT counters, one division per "
-    "side, order-independent max.",
+    "cumulatives via chunked_running_sum; the global cumulative is "
+    "the per-value sum of those dense group cumulatives (no separate "
+    "prefix-sum pass); exact BIGINT counters, one division per side, "
+    "order-independent max. The G-row group table and output ride one "
+    "partition (no range sort, no SinglePartition total).",
 )
 def ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_fcfs_spark.ops.stats import ks_group_drift
@@ -5195,7 +5197,7 @@ def embedding_pc_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     gg AS (
       SELECT shard AS g, ntok AS v, CAST(COUNT(*) AS BIGINT) AS c
-      FROM sharded GROUP BY 1, 2
+      FROM sharded WHERE ntok IS NOT NULL GROUP BY 1, 2
     ),
     grp AS (SELECT g, SUM(c) AS ng FROM gg GROUP BY 1),
     gv AS (SELECT v, SUM(c) AS cc FROM gg GROUP BY 1),
@@ -5208,7 +5210,7 @@ def embedding_pc_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense AS (
       SELECT grp.g, gv.v, grp.ng, COALESCE(gg.c, 0) AS c
       FROM gv CROSS JOIN grp
-      LEFT JOIN gg ON gg.g = grp.g AND gg.v = gv.v
+      LEFT JOIN gg ON gg.g IS NOT DISTINCT FROM grp.g AND gg.v = gv.v
     ),
     dcum AS (
       SELECT g, v, ng,

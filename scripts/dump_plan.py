@@ -1,12 +1,18 @@
 #!/usr/bin/env python
-"""Dump explain("formatted") for named registry queries to plans/rN/.
+"""Dump explain("formatted") for named registry queries to plans/rN/,
+and count the Spark jobs each query runs.
 
 Usage:
     python scripts/dump_plan.py r17 before dsir_selection corpus_pipeline_v4 ...
 
 Writes plans/<round>/<query>_<tag>.txt per query (the judge checks plan
-claims against these files). Uses the same session defaults as bench.py
-(local[$SPARK_GRAFT_CPUS], sf dir from $SPARK_GRAFT_SF_DIR).
+claims against these files). Each query then builds and runs (fetched
+with toPandas, as the benchmark does) under its own job group, so the
+printed line carries its Spark job count next to its exchange count: a
+job-count regression shows in seconds, without a benchmark run. The
+count includes the eager jobs the plan build launches. Uses the same
+session defaults as bench.py (local[$SPARK_GRAFT_CPUS], sf dir from
+$SPARK_GRAFT_SF_DIR).
 """
 
 from __future__ import annotations
@@ -28,14 +34,25 @@ def main() -> None:
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("dump_plan")
+    sc = spark.sparkContext
     qs = dict(all_queries())
     for name in names:
-        df = qs[name].spark_fn(spark, SF_DIR)
-        text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        group = f"dump_plan:{tag}:{name}"
+        sc.setJobGroup(group, name)
+        try:
+            df = qs[name].spark_fn(spark, SF_DIR)
+            text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            rows = len(df.toPandas())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(text)
-        print(f"wrote {path} ({text.count('Exchange (')} Exchange, {text.count('Scan parquet')} parquet scans)")
+        print(
+            f"wrote {path} ({text.count('Exchange (')} Exchange, {jobs} jobs, "
+            f"{text.count('Scan parquet')} parquet scans, {rows} rows)"
+        )
         release_waypoints()
         spark.catalog.clearCache()
 

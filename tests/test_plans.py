@@ -522,7 +522,9 @@ def test_no_unallowed_unpartitioned_windows_static_sweep():
     either a summary-row prefix sum (per-partition counts / chunk
     totals) or a rank-filter gate whose window input is plan-asserted
     TakeOrderedAndProject-bounded. A new unpartitioned window anywhere
-    else fails this test until it's audited and listed."""
+    else fails this test until it's audited and listed. The empty
+    `Window.partitionBy()` whole-frame window is the same funnel and
+    is swept against its own allowlist."""
     import ast
     import pathlib
 
@@ -556,9 +558,18 @@ def test_no_unallowed_unpartitioned_windows_static_sweep():
         # r12: one lag over the calendar-bounded day grain (same
         # kaplan_meier rationale as the rest of the SPC tier)
         ("ops/stats.py", "runs_test"),
+        # non-NULL group id over the coalesced G-row group table
+        ("ops/stats.py", "ks_group_drift"),
+    }
+    # Empty `Window.partitionBy()` whole-frame windows, each over a
+    # summary table bounded by a small dimension
+    ALLOWED_WHOLE_FRAME = {
+        ("ops/sampling.py", "temperature_mix"),  # totals over the coalesced #groups-row count table
+        ("ops/stats.py", "ks_group_drift"),      # corpus total over the coalesced G-row group table
+        ("llm/dsir.py", "dsir_log_weights"),     # totals over the <= num_buckets-row bucket stats
     }
     root = pathlib.Path("hadoop_fcfs_spark")
-    found = set()
+    found, whole_frame = set(), set()
     for path in root.rglob("*.py"):
         tree = ast.parse(path.read_text())
         # map every node to its enclosing function name
@@ -568,17 +579,24 @@ def test_no_unallowed_unpartitioned_windows_static_sweep():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "orderBy"
+                and node.func.attr in ("orderBy", "partitionBy")
                 and isinstance(node.func.value, ast.Name)
                 and node.func.value.id == "Window"
             ):
-                found.add((str(path.relative_to(root)), fn))
+                if node.func.attr == "orderBy":
+                    found.add((str(path.relative_to(root)), fn))
+                elif not node.args and not node.keywords:
+                    whole_frame.add((str(path.relative_to(root)), fn))
             for child in ast.iter_child_nodes(node):
                 visit(child, fn)
         visit(tree, "<module>")
     assert found <= ALLOWED, f"unaudited unpartitioned windows: {sorted(found - ALLOWED)}"
     # the allowlist shouldn't rot either: entries must still exist
     assert found == ALLOWED, f"stale allowlist entries: {sorted(ALLOWED - found)}"
+    assert whole_frame == ALLOWED_WHOLE_FRAME, (
+        f"unaudited whole-frame windows: {sorted(whole_frame - ALLOWED_WHOLE_FRAME)}; "
+        f"stale entries: {sorted(ALLOWED_WHOLE_FRAME - whole_frame)}"
+    )
 
 
 def test_no_unallowed_driver_collects_static_sweep():
@@ -700,6 +718,35 @@ def _distinct_exchange_ids(plan: str, kind: str) -> set:
             rf"Exchange {kind}[^\n]*\[plan_id=(\d+)\]", plan
         )
     }
+
+
+def test_group_grain_tables_ride_one_partition(spark):
+    """Group-grain tables (sources, shards, languages) stay in the one
+    partition their aggregate is coalesced to (SCALING.md, "Group-grain
+    tables ride one partition"): ks_group_drift's G-row output is
+    sorted inside that partition, never range-shuffled, and its corpus
+    total is a window over the coalesced group table, never a
+    SinglePartition aggregate; temperature_mix's totals window reuses
+    its coalesced count table the same way. Each range or
+    SinglePartition exchange would be one more Spark job per query."""
+    from hadoop_fcfs_spark.caching import release_waypoints
+    from hadoop_fcfs_spark.ops.sampling import temperature_mix
+    from hadoop_fcfs_spark.ops.stats import ks_group_drift
+
+    df = spark.createDataFrame(
+        [(f"s{i % 3}", i % 17) for i in range(200)], "g string, v long"
+    )
+    ks = _plan(ks_group_drift(df, "v", "g"))
+    v7 = _plan(Q["corpus_pipeline_v7"].spark_fn(spark, SF_ORACLE))
+    for plan in (ks, v7):
+        assert not _distinct_exchange_ids(plan, "rangepartitioning"), plan
+        assert not _distinct_exchange_ids(plan, "SinglePartition"), plan
+    docs = spark.createDataFrame(
+        [(f"l{i % 5}", i) for i in range(500)], "lang string, doc_id int"
+    )
+    tm = _plan(temperature_mix(docs, "lang", "doc_id", 1, 2))
+    assert not _distinct_exchange_ids(tm, "SinglePartition"), tm
+    release_waypoints()
 
 
 def test_global_as_of_join_single_range_exchange(spark):

@@ -2550,3 +2550,59 @@ def test_host_cap_documents_randomized_replay(spark, data):
         for i, _ in sorted(docs, key=key)[:cap]:
             want[i] = (host, len(docs), min(len(docs), cap))
     assert got == want
+
+
+def _py_ks_group_drift(rows):
+    """Pure-Python twin of ks_group_drift: (group, n_g, n_total, d_e6)
+    sorted by group with the NULL group first. NULL values are dropped;
+    the gap is evaluated at every distinct global value (the dense grid).
+    The NULL group is a group like any other, as in SQL GROUP BY."""
+    import math
+
+    kept = [(g, v) for g, v in rows if v is not None]
+    nn = len(kept)
+    grid = sorted({v for _, v in kept})
+    groups = {}
+    for g, v in kept:
+        groups.setdefault(g, []).append(v)
+
+    def cum(g, v):
+        return sum(1 for x in groups[g] if x <= v)
+
+    out = []
+    for g in sorted(groups, key=lambda g: (g is not None, g or "")):
+        ng = len(groups[g])
+        d = max(
+            abs(cum(g, v) / ng - sum(cum(h, v) for h in groups) / nn)
+            for v in grid
+        )
+        out.append((g, ng, nn, math.floor(d * 1_000_000)))
+    return out
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c", None]),
+            st.one_of(st.none(), st.integers(-300, 300)),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+@example(rows=[("a", 5), ("a", 5), ("a", 7)])  # one group, ties
+@example(rows=[(None, 1), ("b", 1), ("a", None), ("a", 2), ("b", 2)])
+@settings(max_examples=10, deadline=None)
+def test_ks_group_drift_matches_python_reference_ordered(spark, rows):
+    """ks_group_drift vs a pure-Python KS-D replay on small frames with
+    NULL groups, NULL values, single groups and tied values. Compared
+    as an ordered list: the G-row output is sorted inside its one
+    partition (NULL group first), and oracle parity compares rows
+    without regard to order, so this is the check that locks the order."""
+    from hadoop_fcfs_spark.caching import release_waypoints
+    from hadoop_fcfs_spark.ops.stats import ks_group_drift
+
+    df = spark.createDataFrame(rows, "g string, v long")
+    got = [tuple(r) for r in ks_group_drift(df, "v", "g").collect()]
+    release_waypoints()
+    assert got == _py_ks_group_drift(rows)
