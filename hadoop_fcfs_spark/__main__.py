@@ -55,8 +55,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "list":
         for name, spec in sorted(queries.items()):
-            oracle = "oracle" if spec.oracle else "rows-only"
-            print(f"{name:24s} [{oracle}] {spec.doc}")
+            print(f"{name:24s} {spec.doc}")
         return 0
 
     from hadoop_fcfs_spark.session import get_spark

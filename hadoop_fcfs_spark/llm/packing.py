@@ -10,18 +10,17 @@ prefix sum, which is what makes it tractable at corpus scale.
 
 Scale design: a naive `Window.orderBy(id)` cumulative sum collapses to
 ONE partition (Spark warns — the whole corpus through a single task).
-Instead this is a two-level distributed prefix sum:
-  1. per-chunk exclusive cumsum (window partitioned by id-range chunk —
-     parallel across chunks),
-  2. chunk offsets = exclusive cumsum over the per-chunk totals (a
-     window over n_chunks rows — tiny), broadcast-joined back.
-The same decomposition extends to any associative scan at 100 TB.
+Instead this is ``ops.sort.chunked_running_sum`` with no group columns:
+a two-level distributed prefix sum, parallel across id-range chunks,
+with the chunk offsets prefix-summed over the n_chunks summary rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hadoop_fcfs_spark.ops.sort import chunked_running_sum
 
 
 def pack_sequences(
@@ -32,7 +31,9 @@ def pack_sequences(
     chunk: int = 100_000,
 ) -> DataFrame:
     """Per-doc sequence assignment: (id, tokens, seq_id) with
-    seq_id = floor(exclusive-prefix-sum(tokens) in id order / budget).
+    seq_id = floor(exclusive-prefix-sum(tokens) in id order / budget),
+    the exclusive sum being the inclusive chunked running sum minus the
+    doc's own tokens (NULL tokens count as 0).
     `chunk` is the id-range width of the parallel scan unit — size it
     so one chunk's rows fit a task comfortably (ids need not be dense).
 
@@ -50,33 +51,17 @@ def pack_sequences(
             f"id column {id_col!r} must be an integral type for chunked "
             f"prefix-sum ordering, got {id_type}"
         )
-    chunked = df.select(
+    tokens = F.col(token_col).cast("long")
+    lid = F.col(id_col).cast("long")
+    docs = df.select(
+        F.col(id_col), tokens.alias("tokens"), F.coalesce(tokens, F.lit(0)).alias("__tok")
+    )
+    return chunked_running_sum(
+        docs, [], lid - lid % chunk, [id_col], "__tok", "__incl"
+    ).select(
         F.col(id_col),
-        F.col(token_col).cast("long").alias("__tok"),
-        (F.col(id_col).cast("long") - (F.col(id_col).cast("long") % chunk)).alias("__chunk"),
-    )
-    w_local = (
-        Window.partitionBy("__chunk")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = chunked.withColumn(
-        "__local", F.coalesce(F.sum("__tok").over(w_local), F.lit(0))
-    )
-    totals = chunked.groupBy("__chunk").agg(F.sum("__tok").alias("__tot"))
-    # n_chunks rows only — the single-partition window here is over the
-    # chunk SUMMARY, not the data (that's the point of the two levels)
-    w_off = Window.orderBy("__chunk").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__tot").over(w_off), F.lit(0))
-    ).select("__chunk", "__off")
-    return (
-        local.join(F.broadcast(offsets), "__chunk")
-        .select(
-            F.col(id_col),
-            F.col("__tok").alias("tokens"),
-            F.expr(f"CAST((__local + __off) DIV {int(budget)} AS BIGINT)").alias("seq_id"),
-        )
+        "tokens",
+        F.expr(f"CAST((__incl - __tok) DIV {int(budget)} AS BIGINT)").alias("seq_id"),
     )
 
 

@@ -327,29 +327,25 @@ def global_as_of_join(
     right_on: str,
     right_value_cols: list[str],
     suffix: str = "_asof",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """As-of join with NO partition key: for each left row, the right
     row with the greatest ``right_on`` <= ``left_on`` (ties at the exact
     key match). ``as_of_join`` puts each partition key's timeline
     through one window task — with a single global timeline that's the
-    whole dataset, so this variant decomposes like
-    ops.sort.global_running_sum instead: range-partition the tagged
-    union on the key (right rows sort before left at equal keys),
-    carry the last right-row struct forward INSIDE each sorted
-    partition (partition-bounded window), then compute each
-    partition's carry-in from the per-partition last-right summaries —
-    a single window over #partitions SUMMARY rows only — and
-    broadcast it back. Right keys must be unique (e.g. a cumulative
-    grain); the struct tiebreak for duplicate keys is last-by-row-id
-    within a partition, documented not guaranteed across the boundary.
+    whole dataset, so this variant is the ``ops.sort._range_scan``
+    "last" combine over the tagged union instead: range-partitioned on
+    the key (right rows sort before left at equal keys), the last
+    non-NULL right-row struct carried forward inside each partition and
+    across partitions by the per-partition last-right summaries. Right
+    keys must be unique (e.g. a cumulative grain); the struct tiebreak
+    for duplicate keys is last-by-row-id within a partition, documented
+    not guaranteed across the boundary.
 
     Returns left rows + matched right value columns (suffixed), NULL
     when no right key <= the left key exists anywhere."""
-    from pyspark.sql import Window
     from pyspark.sql.types import StructField, StructType
 
-    from hadoop_fcfs_spark.caching import waypoint
+    from hadoop_fcfs_spark.ops.sort import _range_scan
 
     lcols = left.columns
     vals_type = StructType(
@@ -367,39 +363,9 @@ def global_as_of_join(
         F.lit(None).cast(vals_type).alias("__vals"),
         *[F.col(c) for c in lcols],
     )
-    parts = num_partitions or left.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    local = waypoint(
-        r2.unionByName(l2)
-        .repartitionByRange(int(parts), "__kk", "__tag")
-        .sortWithinPartitions("__kk", "__tag")
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright("__mid", 33))
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy("__mid")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # per-partition last right struct; pids with no right rows carry NULL
-    # and last(ignorenulls) over the pid-ordered SUMMARY rows skips them
-    pids = local.groupBy("__pid").agg(
-        F.max_by("__vals", F.when(F.col("__vals").isNotNull(), F.col("__mid")))
-        .alias("__pl")
-    )
-    w_carry = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    carry = pids.withColumn(
-        "__cin", F.last("__pl", ignorenulls=True).over(w_carry)
-    ).select("__pid", "__cin")
-    out = (
-        local.withColumn(
-            "__lm", F.last("__vals", ignorenulls=True).over(w_local)
-        )
-        .join(F.broadcast(carry), "__pid")
-        .withColumn("__m", F.coalesce("__lm", "__cin"))
-        .filter(F.col("__tag") == 1)
-    )
+    out = _range_scan(
+        r2.unionByName(l2), ["__kk", "__tag"], "last", ["__vals"], ["__m"]
+    ).filter(F.col("__tag") == 1)
     return out.select(
         *[F.col(c) for c in lcols],
         *[F.col(f"__m.{c}").alias(f"{c}{suffix}") for c in right_value_cols],

@@ -25,11 +25,14 @@ hash-partitioned by group key. No driver-side collection anywhere.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hadoop_fcfs_spark.caching import waypoint
 
 
 def total_order_sort(df: DataFrame, *keys: Column | str) -> DataFrame:
@@ -44,66 +47,114 @@ def top_k(df: DataFrame, k: int, *keys: Column | str) -> DataFrame:
     return df.orderBy(*keys).limit(k)
 
 
-def ranked_total_order(
+# Per-partition row index: the low 33 bits of monotonically_increasing_id
+_ROW_BITS = (1 << 33) - 1
+
+
+def _sum_over(c: str, w) -> Column:
+    return F.coalesce(F.sum(c).over(w), F.lit(0))
+
+# how -> (prefix window fn, per-partition total, combine(local, offset)).
+# The window fn runs twice: over each sorted range partition for the
+# local prefix, and over the per-partition totals for the offsets.
+_SCANS: dict[str, tuple[Callable, Callable, Callable]] = {
+    "sum": (_sum_over, F.sum, operator.add),
+    "max": (lambda c, w: F.max(c).over(w), F.max, F.greatest),
+    "last": (
+        lambda c, w: F.last(c, ignorenulls=True).over(w),
+        lambda c: F.max_by(c, F.when(F.col(c).isNotNull(), F.col("__mid"))),
+        F.coalesce,
+    ),
+    # 1-based global row number: the local part is the window-free row
+    # index, the total a count, the offsets a sum (no value column read)
+    "rank": (
+        _sum_over,
+        lambda c: F.count("*"),
+        lambda loc, off: (loc + off + 1).cast("int"),
+    ),
+}
+
+
+def _range_scan(
     df: DataFrame,
-    keys: list[Column],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
+    keys: list[Column | str],
+    how: str,
+    value_cols: list[str],
+    out_cols: list[str],
+    inclusive: bool = True,
+) -> DataFrame:
+    """The two-level scan behind every global prefix operator here — a
+    prefix ``how`` (see ``_SCANS``) of each ``value_cols`` entry over the
+    total order of ``keys``, written to the parallel ``out_cols`` —
+    WITHOUT the unpartitioned ``Window.orderBy(...)`` that drags the
+    whole input through one WindowExec task.
+
+      1. ``repartitionByRange`` on the keys into
+         ``spark.sql.shuffle.partitions`` ranges — the one full-data
+         shuffle a plain global sort also pays — then
+         ``sortWithinPartitions``. Range partition ids are ordered by
+         key and equal keys share a partition.
+      2. ``monotonically_increasing_id()`` assigned after the sort is
+         ``(partition_index << 33) | row_index``: the partition id and
+         the local order in JVM codegen, no extra shuffle.
+      3. Local prefixes inside each partition (a window partitioned by
+         ``__pid``; "rank" reads the row index instead), per-partition
+         totals prefixed over the #partitions SUMMARY rows — the only
+         single-partition window — broadcast back as offsets and
+         combined with the local values.
+
+    ``inclusive=False`` gives the strict prefix (earlier rows only):
+    "sum" 0, "max"/"last" NULL for the global first row. Keys must form
+    a total order for a deterministic result. The enumerated table is a
+    persist waypoint: its lineage is nondeterministic (range sampling +
+    monotonically_increasing_id) and it feeds both the totals and the
+    final join, so it must materialize once."""
+    win, total, combine = _SCANS[how]
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    local = waypoint(
+        df.repartitionByRange(parts, *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("__mid", F.monotonically_increasing_id())
+        .withColumn("__pid", F.shiftright("__mid", 33))
+    )
+    idx = range(len(value_cols))
+    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = local.groupBy("__pid").agg(
+        *[total(v).alias(f"__tot{i}") for i, v in enumerate(value_cols)]
+    ).select("__pid", *[win(f"__tot{i}", w_off).alias(f"__off{i}") for i in idx])
+    w_local = (
+        Window.partitionBy("__pid")
+        .orderBy("__mid")
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    )
+    lvals = [
+        F.col("__mid").bitwiseAND(_ROW_BITS) if how == "rank" else win(v, w_local)
+        for v in value_cols
+    ]
+    return (
+        local.select("*", *[c.alias(f"__loc{i}") for i, c in enumerate(lvals)])
+        .join(F.broadcast(offsets), "__pid")
+        .withColumns(
+            {o: combine(F.col(f"__loc{i}"), F.col(f"__off{i}")) for i, o in enumerate(out_cols)}
+        )
+        .drop("__mid", "__pid", *[f"__{p}{i}" for p in ("loc", "off") for i in idx])
+    )
+
+
+def ranked_total_order(
+    df: DataFrame, keys: list[Column], rank_col: str = "rank"
 ) -> DataFrame:
     """Globally sorted output with a materialized 1-based global rank,
     WITHOUT the single-partition ``row_number().over(Window.orderBy(...))``
-    scale-killer (one WindowExec task swallowing the whole table).
-
-    Two-level decomposition (the ``llm/packing.py`` prefix-sum shape,
-    applied to ranking):
-      1. ``repartitionByRange`` on the sort keys — the one full-data
-         shuffle, identical to what a plain global sort pays — then
-         ``sortWithinPartitions``. Range partition ids are ordered by
-         key, so partition p holds exactly the ranks after all rows of
-         partitions < p.
-      2. Per-partition enumeration via ``monotonically_increasing_id()``:
-         the id is ``(partition_index << 33) | row_index_in_partition``,
-         assigned AFTER the sort (nondeterministic expressions are not
-         pushed through sorts), so it yields both the partition id and
-         the local 0-based rank in pure JVM codegen — no extra shuffle,
-         no Python.
-      3. Offsets = exclusive prefix sum over the per-partition COUNTS —
-         a single-partition window over #partitions summary rows only —
-         broadcast-joined back.
+    scale-killer: the :func:`_range_scan` "rank" combine, whose local
+    rank is the per-partition row index (no partition-local window, so
+    no exchange beyond the range shuffle) and whose offsets are the
+    prefix over per-partition counts.
 
     Ranks equal the unpartitioned-window ranks whenever the keys form a
     total order (add a unique tiebreaker otherwise, as with any
-    row_number).
-
-    The enumerated table is a tracked persist waypoint
-    (``caching.waypoint``): it feeds both the count summary and the
-    final join, and its lineage is nondeterministic (range sampling +
-    monotonically_increasing_id) — re-derivation per branch could
-    disagree, so it must materialize once.
-    """
-    from pyspark.sql import Window
-
-    from hadoop_fcfs_spark.caching import waypoint
-
-    parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    mid = F.monotonically_increasing_id()
-    local = waypoint(
-        df.repartitionByRange(int(parts), *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("__mid", mid)
-        .withColumn("__pid", F.shiftright("__mid", 33))
-        .withColumn("__loc", F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)))
-    )
-    counts = local.groupBy("__pid").agg(F.count("*").alias("__n"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("__n").over(w_off), F.lit(0))
-    ).select("__pid", "__off")
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(rank_col, (F.col("__loc") + F.col("__off") + 1).cast("int"))
-        .drop("__mid", "__pid", "__loc", "__off")
-    )
+    row_number)."""
+    return _range_scan(df, keys, "rank", ["__mid"], [rank_col])
 
 
 def global_running_sum(
@@ -112,81 +163,23 @@ def global_running_sum(
     value_col: str | list[str],
     out_col: str | list[str] = "running",
     inclusive: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global (ungrouped) running sum of ``value_col`` over the total
-    order given by ``keys`` — WITHOUT the unpartitioned
-    ``sum().over(Window.orderBy(...))`` that drags the whole input
-    through one WindowExec task.
-
-    Same two-level decomposition as ``ranked_total_order``:
-    ``repartitionByRange`` on the keys (range partition ids are ordered
-    by key, and rows with equal keys land in one partition), local
-    prefix sums inside each sorted partition (partition-bounded
-    windows), then per-partition totals prefix-summed — a
-    single-partition window over #partitions SUMMARY rows only — and
-    broadcast-joined back as offsets. ``inclusive=False`` yields the
-    exclusive prefix sum (0 for each partition's first row).
+    order given by ``keys`` — the :func:`_range_scan` "sum" combine.
+    ``inclusive=False`` yields the exclusive prefix sum (0 for the first
+    row).
 
     ``value_col``/``out_col`` accept parallel LISTS to carry several
     running sums through ONE range shuffle + one offsets broadcast —
     two-column consumers (KS ECDFs, log-rank risk sets) must not pay
-    the scan twice.
-
-    Keys must form a total order for a deterministic result (ties share
-    no defined order, as with any running sum). The enumerated table is
-    a persist waypoint: its lineage is nondeterministic (range sampling
-    + monotonically_increasing_id) and it feeds both the totals and the
-    final join."""
-    from pyspark.sql import Window
-
-    from hadoop_fcfs_spark.caching import waypoint
-
+    the scan twice."""
     vcols = [value_col] if isinstance(value_col, str) else list(value_col)
     ocols = [out_col] if isinstance(out_col, str) else list(out_col)
     if len(vcols) != len(ocols):
         raise ValueError(
             f"value_col/out_col length mismatch: {vcols} vs {ocols}"
         )
-    parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    local = waypoint(
-        df.repartitionByRange(int(parts), *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright("__mid", 33))
-    )
-    end = 0 if inclusive else -1
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy("__mid")
-        .rowsBetween(Window.unboundedPreceding, end)
-    )
-    totals = local.groupBy("__pid").agg(
-        *[F.sum(v).alias(f"__tot_{i}") for i, v in enumerate(vcols)]
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid",
-        *[
-            F.coalesce(F.sum(f"__tot_{i}").over(w_off), F.lit(0)).alias(
-                f"__off_{i}"
-            )
-            for i in range(len(vcols))
-        ],
-    )
-    out = local
-    for i, v in enumerate(vcols):
-        out = out.withColumn(
-            f"__lsum_{i}", F.coalesce(F.sum(v).over(w_local), F.lit(0))
-        )
-    out = out.join(F.broadcast(offsets), "__pid")
-    for i, o in enumerate(ocols):
-        out = out.withColumn(o, F.col(f"__lsum_{i}") + F.col(f"__off_{i}"))
-    return out.drop(
-        "__mid", "__pid",
-        *[f"__lsum_{i}" for i in range(len(vcols))],
-        *[f"__off_{i}" for i in range(len(vcols))],
-    )
+    return _range_scan(df, keys, "sum", vcols, ocols, inclusive)
 
 
 def global_running_max(
@@ -195,52 +188,18 @@ def global_running_max(
     value_col: str,
     out_col: str = "running_max",
     inclusive: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global running MAX of ``value_col`` over the total order given
-    by ``keys`` — the :func:`global_running_sum` decomposition with
-    max as the combine (max is associative and idempotent, so the
-    same two-level split is exact): range partition on the keys,
-    local prefix max inside each sorted partition, per-partition
-    totals prefix-maxed (single-partition window over #partitions
-    SUMMARY rows only), broadcast-joined back and combined with
-    ``greatest``. The high-water-mark primitive: streaming watermark
+    by ``keys`` — the :func:`_range_scan` "max" combine (max is
+    associative and idempotent, so the two-level split is exact; the
+    local and offset sides combine with ``greatest``, which ignores a
+    NULL side). The high-water-mark primitive: streaming watermark
     replay, drawdown analysis, record-to-date scans.
 
     ``inclusive=False`` gives the strict prefix (max over EARLIER
     rows only): NULL for the global first row — callers get NULL
-    semantics, not a sentinel. Keys must form a total order."""
-    from pyspark.sql import Window
-
-    from hadoop_fcfs_spark.caching import waypoint
-
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    local = waypoint(
-        df.repartitionByRange(int(parts), *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn("__pid", F.shiftright("__mid", 33))
-    )
-    end = 0 if inclusive else -1
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy("__mid")
-        .rowsBetween(Window.unboundedPreceding, end)
-    )
-    totals = local.groupBy("__pid").agg(F.max(value_col).alias("__tot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid", F.max("__tot").over(w_off).alias("__off")
-    )
-    return (
-        local.withColumn("__lmax", F.max(value_col).over(w_local))
-        .join(F.broadcast(offsets), "__pid")
-        # greatest() ignores NULL sides (NULL only when both are)
-        .withColumn(out_col, F.greatest("__lmax", "__off"))
-        .drop("__mid", "__pid", "__lmax", "__off")
-    )
+    semantics, not a sentinel."""
+    return _range_scan(df, keys, "max", [value_col], [out_col], inclusive)
 
 
 def ntile_from_rank(rank: Column, n: int, k: int) -> Column:
@@ -300,8 +259,6 @@ def latest_by_key(
     recency order, HIGHEST first wins; include a unique tiebreaker for
     determinism. The rank()=1 filter compiles to WindowGroupLimit on
     Spark 4, so per-group state is O(1) — no full sort of the group."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
     return df.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") == 1).drop("__rk")
 

@@ -25,15 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None => non-SQL-expressible; driver does rows-only check
+    oracle: str  # DuckDB SQL twin; every gate is value-checked against it
     doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None, doc: str = ""):
+def register(name: str, oracle: str, doc: str = ""):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if not oracle or not oracle.strip():
+            # a gate without its DuckDB twin verifies nothing
+            raise ValueError(f"gate {name!r} needs a non-empty oracle")
         if name in _REGISTRY:
             # a silent overwrite would drop a gate from the driver's
             # correctness sweep without any test failing
@@ -262,14 +265,11 @@ def all_queries() -> dict[str, QuerySpec]:
     # gates, explicitly ordered; (1) anything registered after the table
     # was built (new this round) in registration order; (2) confirmed
     # gates, oldest-latest-round first (re-validation rotation),
-    # name-tiebroken; (3) rows-only gates last (weak check, never worth
-    # a sampled slot).
+    # name-tiebroken.
     never_rank = {name: i for i, name in enumerate(_NEVER_SAMPLED)}
     reg_rank = {name: i for i, name in enumerate(_REGISTRY)}
 
     def bucket(spec: QuerySpec) -> tuple:
-        if spec.oracle is None:
-            return (3, 0, spec.name)
         if spec.name in never_rank:
             return (0, never_rank[spec.name], spec.name)
         if spec.name not in _DRIVER_CONFIRMED_ROUND:

@@ -45,10 +45,7 @@ def get_spark(app_name: str = "hadoop_fcfs_spark", master: str | None = None) ->
         # here on the lineitem round-trip: write 2.2 s -> 1.1 s, read
         # 0.6 s -> 0.3 s, 11 MB -> 8.3 MB. Scale-independent (zstd is
         # also the production recommendation); overridable via conf.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -67,33 +64,3 @@ def get_spark(app_name: str = "hadoop_fcfs_spark", master: str | None = None) ->
     except Exception:
         pass  # log4j2 API absent/renamed: cosmetic only, never fail startup
     return spark
-
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict:
-    """Read the driver's parquet tables and register temp views.
-
-    Parquet scans give Catalyst pushdown + pruning for free; every query
-    module filters/projects before shuffling so the scan stays minimal.
-    """
-    dfs = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs

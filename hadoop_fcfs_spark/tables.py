@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 
 # Analyzed-plan handles, keyed (applicationId, sf_dir, table). This is
-# catalog registration (the load_tables/temp-view idiom) in function
+# catalog registration (the temp-view idiom of register_views) in function
 # form: spark.read.parquet re-lists the directory and re-reads footers
 # on EVERY call (~0.1-0.3 s of driver time per table per query,
 # measured), while the returned DataFrame is an immutable logical plan

@@ -392,14 +392,14 @@ def test_as_of_join_basic_null_and_ties(spark):
 
 def test_wrapper_surface_smoke(spark, tmp_path):
     """Thin built-in wrappers (covered operators, uncovered entry points):
-    csv/orc round-trips, inverse, noop sink, records counter, load_tables
-    view registration, total_order_sort global ordering."""
+    csv/orc round-trips, inverse, noop sink, records counter,
+    register_views view registration, total_order_sort global ordering."""
     from hadoop_fcfs_spark.io.readers import read_csv, read_orc
     from hadoop_fcfs_spark.io.writers import write_noop
     from hadoop_fcfs_spark.metrics import records_counter
     from hadoop_fcfs_spark.ops.sort import total_order_sort
     from hadoop_fcfs_spark.ops.textops import inverse
-    from hadoop_fcfs_spark.session import load_tables
+    from hadoop_fcfs_spark.tables import register_views
 
     df = spark.createDataFrame([("a", 1), ("b", 2), ("c", 0)], "key string, value int")
     # csv round-trip
@@ -420,9 +420,9 @@ def test_wrapper_surface_smoke(spark, tmp_path):
     counted_df, obs = records_counter(df)
     counted_df.write.format("noop").mode("overwrite").save()
     assert obs.get["count"] == 3
-    # load_tables registers temp views readable via SQL
-    loaded = load_tables(spark, "/root/testdata/sf0.001", ("region", "nation"))
-    assert set(loaded) == {"region", "nation"}
+    # register_views registers temp views readable via SQL
+    loaded = register_views(spark, "/root/testdata/sf0.001")
+    assert {"region", "nation"} <= set(loaded)
     assert spark.sql("SELECT COUNT(*) AS n FROM region").collect()[0]["n"] == 5
     # total order sort: globally ascending across partitions
     big = spark.range(0, 10_000).select((F.col("id") * 2654435761 % 1_000_003).alias("k"))
@@ -518,6 +518,17 @@ def test_sampling_guards():
         stratified_sample(df, "k", "k", {"x": -0.1})
     with pytest.raises(ValueError, match="n must be"):
         per_group_sample(df, "k", "k", 0)
+
+
+def test_register_rejects_gate_without_oracle():
+    """Every gate is value-checked against its DuckDB twin: a gate
+    with an empty oracle is refused and never enters the registry."""
+    from hadoop_fcfs_spark.registry import _REGISTRY, register
+
+    for oracle in ("", "  "):
+        with pytest.raises(ValueError, match="oracle"):
+            register("__no_oracle", oracle)(lambda spark, sf: None)
+    assert "__no_oracle" not in _REGISTRY
 
 
 def test_cli_list_run_sql(spark, capsys, tmp_path):
@@ -2359,9 +2370,13 @@ def test_global_as_of_join_matches_partitioned_asof(spark):
     big_left = spark.createDataFrame(
         [(i,) for i in range(0, 500, 7)], "k long"
     )
-    got = {r["k"]: r["tagv_asof"] for r in
-           global_as_of_join(big_left, big_right, "k", "k", ["tagv"],
-                             num_partitions=8).collect()}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        got = {r["k"]: r["tagv_asof"] for r in
+               global_as_of_join(big_left, big_right, "k", "k", ["tagv"]).collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     for k, v in got.items():
         assert v == f"v{k // 10}"
 
@@ -4885,20 +4900,23 @@ def test_global_running_max_two_level(spark):
     df = spark.createDataFrame(
         [(1, 3), (2, 1), (3, 4), (4, 1), (5, 5)], "i int, v int"
     )
-    got = {
-        r["i"]: r["rm"]
-        for r in global_running_max(
-            df, ["i"], "v", out_col="rm", num_partitions=3
-        ).collect()
-    }
-    assert got == {1: 3, 2: 3, 3: 4, 4: 4, 5: 5}
-    got = {
-        r["i"]: r["rm"]
-        for r in global_running_max(
-            df, ["i"], "v", out_col="rm", inclusive=False, num_partitions=3
-        ).collect()
-    }
-    assert got == {1: None, 2: 3, 3: 3, 4: 4, 5: 4}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        got = {
+            r["i"]: r["rm"]
+            for r in global_running_max(df, ["i"], "v", out_col="rm").collect()
+        }
+        assert got == {1: 3, 2: 3, 3: 4, 4: 4, 5: 5}
+        got = {
+            r["i"]: r["rm"]
+            for r in global_running_max(
+                df, ["i"], "v", out_col="rm", inclusive=False
+            ).collect()
+        }
+        assert got == {1: None, 2: 3, 3: 3, 4: 4, 5: 4}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_watermark_late_audit_hand_values(spark):

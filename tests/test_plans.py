@@ -530,15 +530,13 @@ def test_no_unallowed_unpartitioned_windows_static_sweep():
 
     ALLOWED = {
         # (file, enclosing function): why it's bounded
-        ("ops/sort.py", "ranked_total_order"),       # offsets over per-partition COUNT summary
-        ("ops/sort.py", "global_running_sum"),       # offsets over per-partition TOTAL summary
-        ("ops/sort.py", "global_running_max"),       # offsets over per-partition MAX summary
-        ("ops/joins.py", "global_as_of_join"),       # carry-in over per-partition LAST summary
+        # two-level scan kernel (ranked_total_order, global_running_sum/max,
+        # global_as_of_join): offsets over the per-partition summary rows
+        ("ops/sort.py", "_range_scan"),
         ("ops/stats.py", "pareto_frontier"),         # prefix max over one-row-per-chunk summary
         ("ops/stats.py", "kaplan_meier"),            # risk/product windows over duration-grain summary
         ("ops/stats.py", "restricted_mean_survival"),  # LEAD over the same duration-grain summary
         ("ops/stats.py", "aalen_johansen"),          # same duration-grain summary windows (KM family)
-        ("llm/packing.py", "pack_sequences"),        # offsets over chunk-total summary
         ("queries_relational.py", "topk_orders"),    # TakeOrderedAndProject(limit=k) plan-asserted
         ("queries_relational.py", "shipping_priority"),
         ("queries_relational.py", "grep_top"),

@@ -331,6 +331,73 @@ def test_chunked_running_sum_matches_naive_window(spark, rows):
     assert got == want
 
 
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 5), st.one_of(st.none(), st.integers(-5, 5))),
+        min_size=1,
+        max_size=12,
+    ),
+    st.sampled_from([2, 3, 16]),
+)
+# NULLs closing a partition: the "last" carry-in must skip them
+@example([(0, 1), (1, None), (2, None), (3, None), (4, None), (5, None)], 3)
+@settings(max_examples=8, deadline=None)
+def test_range_scan_matches_global_window(spark, rows, parts):
+    """The two-level range-scan kernel == the single-task
+    ``Window.orderBy`` prefix for every combine (sum/max/last inclusive
+    and exclusive, rank as row_number), with NULL values, over few range partitions and over
+    more shuffle partitions than rows. "sum" is NULL-free by contract
+    (an all-NULL prefix sums to 0)."""
+    from pyspark.sql import Window
+
+    from hadoop_fcfs_spark.ops.sort import _range_scan
+
+    df = spark.createDataFrame(
+        [(o, i, v) for i, (o, v) in enumerate(rows)], "o long, seq long, v long"
+    )
+    ref = {
+        "sum": lambda w: F.coalesce(F.sum("v").over(w), F.lit(0)),
+        "max": lambda w: F.max("v").over(w),
+        "last": lambda w: F.last("v", ignorenulls=True).over(w),
+        "rank": lambda w: F.row_number().over(w),
+    }
+    cases = [
+        (how, inclusive)
+        for how in ref
+        for inclusive in (True, False)
+        if inclusive or how != "rank"
+    ]
+    want = {
+        r["seq"]: r
+        for r in df.select(
+            "seq",
+            *[
+                ref[how](
+                    Window.orderBy("o", "seq").rowsBetween(
+                        Window.unboundedPreceding, 0 if inclusive else -1
+                    )
+                ).alias(f"{how}_{inclusive}")
+                for how, inclusive in cases
+            ],
+        ).collect()
+    }
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        for how, inclusive in cases:
+            got = {
+                r["seq"]: r["out"]
+                for r in _range_scan(
+                    df, ["o", "seq"], how, ["v"], ["out"], inclusive
+                ).collect()
+            }
+            assert got == {k: r[f"{how}_{inclusive}"] for k, r in want.items()}, (
+                how, inclusive, parts,
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 @given(st.lists(st.text(alphabet="abcd", min_size=4, max_size=6), min_size=2, max_size=15, unique=True))
 @settings(max_examples=8, deadline=None)
 def test_fuzzy_term_pairs_matches_bruteforce(spark, terms):
