@@ -499,39 +499,53 @@ def bm25_scores(
         idf  = ln(1 + (N - df + 0.5) / (df + 0.5))     [non-negative]
         s    = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
 
-    Same two word-count-shaped aggregations as tf_idf plus a doc-length
-    table (joined on id — co-partitioned with tf's id grouping) and ONE
-    broadcast scalar row (N, avgdl). The doc-frequency table stays
-    vocabulary-sized and shuffles on term — never broadcast. Scores in
-    floor-micro units; cross-engine equality shares tf_idf's observed
-    libm-ln parity. Output: (id, term, tf, doc_freq, bm25_e6)."""
-    toks = _tokens(text_col)
+    `id_col` is a document key: one row per document. tf groups on
+    (id, term) and N counts rows, so both assume it.
+
+    One tokenize pass. Each document is projected once to (id, tokens,
+    dl) and exploded to (id, dl, term); dl rides with the pair, so no
+    doc-length table is joined back on id. The pairs are hash-partitioned
+    on term ONCE, and both tf (grouped by (id, term, dl)) and doc_freq
+    (count(*) over the term partition) run on that one exchange; a
+    caller's filter on term pushes below the window and the aggregate.
+    The doc-frequency figures stay term-partitioned — never broadcast.
+    (N, avgdl) is one single-exchange aggregate over the doc projection
+    (docs with no tokens count in both), cross-joined as ONE broadcast
+    scalar row. Partitioning on term ahead of the aggregate gives up the
+    map-side combine (SCALING.md "BM25"). Scores in floor-micro units;
+    cross-engine equality shares tf_idf's observed libm-ln parity.
+    Output: (id, term, tf, doc_freq, bm25_e6)."""
+    from pyspark.sql import Window
+
     # no fan_out here: measured at sf0.1, the repartition costs more than
     # the explode parallelism buys (tokenize-and-count is cheap per row;
-    # the shingling builders that DO fan_out pay quadratic work per doc)
-    lens = df.select(F.col(id_col), F.size(toks).alias("__dl"))
-    pairs = df.select(F.col(id_col), F.explode(toks).alias("term"))
-    tf = pairs.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("doc_freq"))
-    scalars = lens.agg(
-        F.countDistinct(id_col).cast("double").alias("__N"),
+    # the shingling builders that DO fan_out pay quadratic work per doc).
+    # Two projections, so dl sizes the token array instead of splitting
+    # the text again.
+    docs = df.select(F.col(id_col), _tokens(text_col).alias("__toks")).select(
+        id_col, "__toks", F.size("__toks").alias("__dl")
+    )
+    pairs = docs.select(id_col, "__dl", F.explode("__toks").alias("term"))
+    tf = (
+        pairs.repartition("term")
+        .groupBy(id_col, "term", "__dl")
+        .agg(F.count("*").alias("tf"))
+        .withColumn("doc_freq", F.count("*").over(Window.partitionBy("term")))
+    )
+    scalars = docs.agg(
+        F.count("*").cast("double").alias("__N"),
         F.avg("__dl").alias("__avgdl"),
     )
     idf = F.log(1 + (F.col("__N") - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5))
     denom = F.col("tf") + k1 * (1 - b + b * F.col("__dl") / F.col("__avgdl"))
-    return (
-        tf.join(dfreq, "term")
-        .join(lens, id_col)
-        .crossJoin(F.broadcast(scalars))
-        .select(
-            F.col(id_col),
-            F.col("term"),
-            F.col("tf").cast("long").alias("tf"),
-            F.col("doc_freq").cast("long").alias("doc_freq"),
-            F.floor(idf * (F.col("tf") * (k1 + 1) / denom) * 1_000_000.0)
-            .cast("long")
-            .alias("bm25_e6"),
-        )
+    return tf.crossJoin(F.broadcast(scalars)).select(
+        F.col(id_col),
+        F.col("term"),
+        F.col("tf").cast("long").alias("tf"),
+        F.col("doc_freq").cast("long").alias("doc_freq"),
+        F.floor(idf * (F.col("tf") * (k1 + 1) / denom) * 1_000_000.0)
+        .cast("long")
+        .alias("bm25_e6"),
     )
 
 

@@ -1446,7 +1446,7 @@ def corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM pairs GROUP BY 1, 2),
     dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS doc_freq
               FROM tf GROUP BY 1),
-    sc AS (SELECT CAST((SELECT COUNT(DISTINCT doc_id) FROM documents) AS DOUBLE) AS n,
+    sc AS (SELECT CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) AS n,
                   (SELECT AVG(dl) FROM lens) AS avgdl),
     scored AS (
       SELECT t.doc_id,

@@ -8,9 +8,11 @@ Usage:
 Writes plans/<round>/<query>_<tag>.txt per query (the judge checks plan
 claims against these files). Each query then builds and runs (fetched
 with toPandas, as the benchmark does) under its own job group, so the
-printed line carries its Spark job count next to its exchange count: a
-job-count regression shows in seconds, without a benchmark run. The
-count includes the eager jobs the plan build launches. Uses the same
+printed line carries its Spark job count and the shuffle bytes its
+jobs wrote next to its exchange count: a job-count or shuffle
+regression shows in seconds, without a benchmark run. Both include the
+eager jobs the plan build launches; a stage listed by several jobs
+counts once, and a skipped stage not at all. Uses the same
 session defaults as bench.py (local[$SPARK_GRAFT_CPUS], sf dir from
 $SPARK_GRAFT_SF_DIR).
 """
@@ -29,6 +31,20 @@ from hadoop_fcfs_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def shuffle_bytes_written(sc, job_ids) -> int:
+    """Shuffle bytes written by the stages of `job_ids` that ran, read
+    from the application status store once its listener has caught up."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    stages = set()
+    for job in job_ids:
+        ids = store.job(job).stageIds()
+        stages.update(ids.apply(i) for i in range(ids.size()))
+    ran = (store.lastStageAttempt(s) for s in stages)
+    return sum(st.shuffleWriteBytes() for st in ran if st.status().toString() == "COMPLETE")
+
+
 def main() -> None:
     rnd, tag, *names = sys.argv[1:]
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
@@ -45,12 +61,14 @@ def main() -> None:
             rows = len(df.toPandas())
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        job_ids = sc.statusTracker().getJobIdsForGroup(group)
+        shuffle = shuffle_bytes_written(sc, job_ids)
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(text)
         print(
-            f"wrote {path} ({text.count('Exchange (')} Exchange, {jobs} jobs, "
+            f"wrote {path} ({text.count('Exchange (')} Exchange, {len(job_ids)} jobs, "
+            f"{shuffle} shuffle bytes written, "
             f"{text.count('Scan parquet')} parquet scans, {rows} rows)"
         )
         release_waypoints()

@@ -468,7 +468,8 @@ def test_weighted_sample_bounded_plans(spark):
 
 def test_bm25_no_vocabulary_broadcast(spark):
     """Top-20 must be TakeOrderedAndProject (not a global sort) and the
-    plan must carry no cartesian beyond the 1-row scalar cross join.
+    plan must carry no cartesian beyond the 1-row scalar cross join,
+    with documents tokenized once.
     (AQE legitimately broadcasts the vocab-sized tables at sf0.01; the
     scale contract — never FORCE that broadcast — lives in the code,
     which only hints F.broadcast on the scalar row.)"""
@@ -479,6 +480,16 @@ def test_bm25_no_vocabulary_broadcast(spark):
     # the only explicit broadcast HINT is the scalar: check the optimized
     # logical plan carries exactly one user hint
     assert _optimized(df).count("UnresolvedHint broadcast") <= 1
+    # one tokenize pass: a single explode feeds tf and doc_freq, dl rides
+    # with the (id, term) pair instead of a doc-length table joined back
+    # on id, and the shuffles are the term partitioning, the (N, avgdl)
+    # scalar and the final per-doc sum
+    nodes = [l.lstrip(" :+-") for l in plan.splitlines()]
+    assert sum(n.startswith("Generate ") for n in nodes) == 1
+    joins = [n for n in nodes if "Join" in n.split(" ", 1)[0]]
+    assert not any("doc_id#" in n for n in joins), joins
+    shuffles = [n for n in nodes if n.startswith("Exchange ")]
+    assert len(shuffles) <= 3, shuffles
 
 
 def test_merge_upsert_single_outer_join(spark):

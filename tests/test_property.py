@@ -2673,3 +2673,53 @@ def test_ks_group_drift_matches_python_reference_ordered(spark, rows):
     got = [tuple(r) for r in ks_group_drift(df, "v", "g").collect()]
     release_waypoints()
     assert got == _py_ks_group_drift(rows)
+
+
+def _py_bm25(texts, k1=1.2, b=0.75):
+    """Okapi BM25 per (doc, term) in plain Python, in the kernel's
+    floating-point operation order: N counts every document, and a doc
+    with no tokens adds 0 to avgdl."""
+    import math
+    import re
+    from collections import Counter
+
+    toks = [[w for w in re.split(r"\s+", s) if w != ""] for s in texts]
+    n = float(len(toks))
+    avgdl = sum(len(t) for t in toks) / n
+    dfreq = Counter(w for t in toks for w in set(t))
+    out = set()
+    for i, t in enumerate(toks):
+        for w, tf in Counter(t).items():
+            d = dfreq[w]
+            idf = math.log((n - d + 0.5) / (d + 0.5) + 1.0)
+            denom = tf + k1 * ((b * len(t)) / avgdl + (1 - b))
+            out.add((i, w, tf, d, math.floor(idf * (tf * (k1 + 1) / denom) * 1_000_000.0)))
+    return out
+
+
+@given(
+    st.lists(st.text(alphabet="ab \t\n", max_size=12), min_size=1, max_size=10),
+    st.sampled_from([1, 3, 16]),
+)
+@example(["", "   ", "a a b"], 3)  # empty and whitespace-only docs count in N
+@example(["a"], 1)  # single-document corpus
+@example(["b a b b", "\t\n", "a", ""], 16)  # more partitions than pairs
+@settings(max_examples=5, deadline=None)
+def test_bm25_scores_matches_python_okapi(spark, texts, parts):
+    """bm25_scores == a pure-Python Okapi BM25 (k1=1.2, b=0.75, floor
+    micro-units) on small corpora with empty and whitespace-only docs,
+    repeated terms and single-doc corpora; the answer must not depend on
+    the shuffle partition count."""
+    from hadoop_fcfs_spark.llm.textan import bm25_scores
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        out = bm25_scores(df, "doc_id", "text")
+        assert out.columns == ["doc_id", "term", "tf", "doc_freq", "bm25_e6"]
+        got = [tuple(r) for r in out.collect()]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert len(got) == len(set(got))
+    assert set(got) == _py_bm25(texts)
