@@ -6382,3 +6382,45 @@ def test_herdan_c_hand_values(spark):
     assert herdan_c(hapax, "w", "n").collect()[0]["herdan_c_e6"] == 1_000_000
     single = spark.createDataFrame([("a", 1)], "w string, n long")
     assert herdan_c(single, "w", "n").collect()[0]["herdan_c_e6"] is None
+
+
+def test_pydaemon_rereads_zip_directory_only_when_changed(tmp_path, monkeypatch):
+    """The worker daemon's zip invalidation re-reads an archive's
+    directory once, skips it while the archive is unchanged, and reads
+    it again (picking up a new module) once the archive changes."""
+    import zipfile
+    import zipimport
+
+    from hadoop_fcfs_spark import pydaemon
+
+    reads = []
+    original = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(pydaemon, "_reread", lambda imp: (reads.append(1), original(imp)))
+    z = tmp_path / "mods.zip"
+    with zipfile.ZipFile(z, "w") as f:
+        f.writestr("a.py", "x = 1\n")
+    imp = zipimport.zipimporter(str(z))
+    pydaemon._invalidate_if_changed(imp)
+    pydaemon._invalidate_if_changed(imp)
+    assert len(reads) == 1
+    with zipfile.ZipFile(z, "a") as f:
+        f.writestr("b.py", "y = 2\n")
+    assert imp.find_spec("b") is None  # the importer still holds the old directory
+    pydaemon._invalidate_if_changed(imp)
+    assert len(reads) == 2
+    assert imp.find_spec("b") is not None
+
+
+def test_python_tasks_run_under_package_daemon(spark):
+    """get_spark's Python workers are forked from hadoop_fcfs_spark.pydaemon
+    and carry its zip invalidation."""
+
+    def probe(_):
+        import sys
+        import zipimport
+
+        spec = getattr(sys.modules["__main__"], "__spec__", None)
+        return (getattr(spec, "name", None), zipimport.zipimporter.invalidate_caches.__name__)
+
+    got = set(spark.sparkContext.parallelize(range(4), 2).map(probe).collect())
+    assert got == {("hadoop_fcfs_spark.pydaemon", "_invalidate_if_changed")}
