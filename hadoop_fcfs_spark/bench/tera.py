@@ -12,15 +12,16 @@ Parity targets (reference ``examples/terasort/`` — SURVEY.md §2.5/§5):
   part files in order yields globally sorted data — the TeraSort
   contract.
 - ``TeraValidate.java`` / ``SortValidator.java:54``: (a) within each
-  partition keys are non-decreasing, (b) partition boundaries are
-  non-decreasing across part files, (c) a content checksum (sum of
-  per-row key hashes) is preserved input→output — catching dropped or
-  duplicated rows, not just misordering.
+  partition keys are non-decreasing, (b) each partition's last key is
+  at most the next partition's first key, (c) a content checksum (sum
+  of per-record CRC-32 over key and value) is preserved input→output —
+  catching dropped, duplicated or altered rows, not just misordering.
+  :func:`teravalidate` is one partition-local JVM pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -49,57 +50,112 @@ def terasort(df: DataFrame, key_col: str = "key") -> DataFrame:
     return df.orderBy(key_col)
 
 
+# monotonically_increasing_id() is (partition index << 33) | row index
+_ROW_BITS = (1 << 33) - 1
+_CHECKSUM_MASK = 0x7FFFFFFFFFFFFFFF
+
+
+def _validation(sorted_df: DataFrame, key_col: str) -> tuple[DataFrame, Observation]:
+    """The validator's one partition-local pass: every partition's first
+    and last row ``(pid, first, last, key)`` — at most two rows per
+    partition — plus an observation of ``rows``, ``displaced`` and
+    ``checksum`` over all rows, filled in by the action that collects the
+    edges.
+
+    - ``__m1`` is each row's place in its partition as stored.
+    - A local re-sort by ``(key, __m1)`` assigns ``__m2``: a row is
+      displaced exactly when its place moves, so a partition is sorted
+      exactly when ``__m1 == __m2`` on all its rows. ``__m1`` keeps tied
+      keys in their stored order even where the sort merges spilled
+      runs, which is not stable.
+    - A local re-sort by ``__m1`` descending assigns ``__m3``: row index 0
+      of ``__m1`` is the partition's first row, of ``__m3`` its last.
+
+    Both re-sorts stay inside the partition, so the pass adds no exchange
+    and runs in the JVM. The ids between the sorts are nondeterministic,
+    which keeps Catalyst from dropping the first sort as overridden by the
+    second. The row index has 33 bits: a partition may hold at most 2^33
+    rows."""
+    record = F.concat(
+        F.col(key_col),
+        *[F.col(c).cast("string").cast("binary") for c in sorted_df.columns if c != key_col],
+    )
+    stored = sorted_df.select(
+        F.col(key_col).alias("__k"),
+        F.crc32(record).alias("__crc"),
+        F.monotonically_increasing_id().alias("__m1"),
+    )
+    local = (
+        stored.sortWithinPartitions("__k", "__m1")
+        .withColumn("__m2", F.monotonically_increasing_id())
+        .sortWithinPartitions(F.col("__m1").desc())
+        .withColumn("__m3", F.monotonically_increasing_id())
+    )
+    obs = Observation()
+    first = F.col("__m1").bitwiseAND(_ROW_BITS) == 0
+    last = F.col("__m3").bitwiseAND(_ROW_BITS) == 0
+    edges = (
+        local.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if(F.col("__m1") != F.col("__m2")).alias("displaced"),
+            F.sum(F.col("__crc").cast("decimal(38,0)")).alias("checksum"),
+        )
+        .where(first | last)
+        .select(
+            F.shiftright("__m1", 33).alias("pid"),
+            first.alias("first"),
+            last.alias("last"),
+            F.col("__k").alias("key"),
+        )
+    )
+    return edges, obs
+
+
 def teravalidate(sorted_df: DataFrame, key_col: str = "key") -> dict:
-    """Distributed validation — no driver-side key collection:
-    per-partition (min, max, count, inversions, crc checksum), then
-    boundary continuity checked across the handful of partition rows.
-    Returns {'ok': bool, 'rows': n, 'checksum': long,
-    'order_violations': n_adjacent_inversions_within_partitions,
-    'boundary_violations': n_partition_boundary_inversions} — the counts
-    make the verdict value-comparable (TeraValidate emits 'error' records
-    per misordering; we emit the count)."""
+    """TeraValidate (``TeraValidate.java``): is ``sorted_df`` totally
+    ordered by ``key_col`` in partition order, and what does it hold?
+    One partition-local JVM pass (:func:`_validation`), no exchange of
+    its own and no Python worker; the driver receives only each
+    partition's first and last key, as TeraValidate's reducer receives
+    the mappers' ``:begin``/``:end`` records.
 
-    def part_stats(idx: int, it):
-        import builtins
-        import zlib  # crc32 — deterministic across processes (TeraChecksum parity)
+    Returns {'ok', 'rows', 'checksum', 'order_violations',
+    'boundary_violations'}:
 
-        prev = None
-        inversions = 0
-        n = 0
-        mn = mx = None
-        chk = 0
-        for row in it:
-            k = bytes(row[key_col])
-            if prev is not None and k < prev:
-                inversions += 1
-            prev = k
-            n += 1
-            mn = k if mn is None else builtins.min(mn, k)
-            mx = k if mx is None else builtins.max(mx, k)
-            chk = (chk + zlib.crc32(k)) & 0x7FFFFFFFFFFFFFFF
-        yield (idx, inversions, n, mn, mx, chk)
+    - ``order_violations``: rows out of place inside their partition —
+      those a stable sort of the partition by key would move; 0 exactly
+      when every partition is sorted.
+    - ``boundary_violations``: adjacent non-empty partitions whose
+      earlier partition's last key is greater than the later one's first
+      key.
+    - ``checksum``: sum of the CRC-32 of every whole record mod 2^63,
+      TeraValidate's key+value checksum: the key bytes followed by the
+      other columns in schema order, each as the UTF-8 bytes of its
+      string form (``rowid`` 12 as ``b"12"``). Order-free, so it
+      matches between unsorted input and sorted output; it reads every
+      column, so a sort cannot prune the payload from its exchange. A
+      record with a NULL field adds nothing to it (TeraGen writes none).
+    - ``ok``: no order and no boundary violation.
 
-    stats = sorted(sorted_df.rdd.mapPartitionsWithIndex(part_stats).collect())
-    order_violations = sum(s[1] for s in stats)
-    boundary_violations = 0
-    nonempty = [s for s in stats if s[2] > 0]
-    for a, b in zip(nonempty, nonempty[1:]):
-        if a[4] > b[3]:  # prev partition max > next partition min
-            boundary_violations += 1
+    Keys compare as unsigned bytes (Spark's BinaryType order). At most
+    2^33 rows per partition (the row-index bits of
+    ``monotonically_increasing_id``)."""
+    edges, obs = _validation(sorted_df, key_col)
+    firsts, lasts = {}, {}
+    for r in edges.collect():
+        if r["first"]:
+            firsts[r["pid"]] = bytes(r["key"])
+        if r["last"]:
+            lasts[r["pid"]] = bytes(r["key"])
+    m = obs.get
+    pids = sorted(firsts)
+    boundary_violations = sum(lasts[a] > firsts[b] for a, b in zip(pids, pids[1:]))
+    order_violations = m["displaced"]
     return {
         "ok": order_violations == 0 and boundary_violations == 0,
-        "rows": sum(s[2] for s in stats),
-        "checksum": sum(s[5] for s in stats) & 0x7FFFFFFFFFFFFFFF,
+        "rows": m["rows"],
+        "checksum": int(m["checksum"] or 0) & _CHECKSUM_MASK,
         "order_violations": order_violations,
         "boundary_violations": boundary_violations,
     }
-
-
-def content_checksum(df: DataFrame, key_col: str = "key") -> int:
-    """Order-insensitive content checksum (SortValidator's record-hash
-    sum): sum of xxhash64(key) in decimal(38) — ANSI-safe against long
-    overflow — computed JVM-side, one scan."""
-    s = df.select(
-        F.sum(F.xxhash64(F.col(key_col)).cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
-    return int(s)

@@ -360,15 +360,13 @@ def _scan_pass(blob, pos, scomps, ss, se, ah, al, ri, mcux, mcuy) -> int:
     return reader.pos
 
 
-def decode_jpeg(blob: bytes):
-    """Decode a baseline OR progressive (Huffman) JPEG -> (h, w, 3)
-    uint8 RGB (grayscale files are replicated to 3 channels). Both
-    processes run through one coefficient-accumulation core: baseline
-    is a single full-band scan, progressive (SOF2) accumulates
-    DC/AC spectral-selection and successive-approximation scans
-    (T.81 Annex G) into the same per-component arrays, with one
-    dequant + IDCT at the end. Raises ValueError on non-JPEG,
-    truncated streams, and the arithmetic/lossless/12-bit processes."""
+def _decode_coefficients(blob: bytes):
+    """Parse the markers and entropy-decode every scan of ``blob``:
+    returns ``((h, w), comps, qtables, hmax, vmax)``, where
+    ``comps[i]["coef"]`` holds component i's quantized coefficients in
+    zigzag order over the padded MCU grid (the layout of
+    :func:`_plan_quantized`'s blocks) and ``comps[i]["tq"]`` names its
+    table in ``qtables``."""
     import numpy as np
 
     if len(blob) < 4 or blob[:3] != _JPEG_SIG:
@@ -535,7 +533,21 @@ def decode_jpeg(blob: bytes):
 
     if frame is None or nscans == 0:
         raise ValueError("truncated JPEG: no SOS marker")
-    h, w = frame
+    return frame, comps, qtables, hmax, vmax
+
+
+def decode_jpeg(blob: bytes):
+    """Decode a baseline OR progressive (Huffman) JPEG -> (h, w, 3)
+    uint8 RGB (grayscale files are replicated to 3 channels). Both
+    processes run through one coefficient-accumulation core: baseline
+    is a single full-band scan, progressive (SOF2) accumulates
+    DC/AC spectral-selection and successive-approximation scans
+    (T.81 Annex G) into the same per-component arrays, with one
+    dequant + IDCT at the end. Raises ValueError on non-JPEG,
+    truncated streams, and the arithmetic/lossless/12-bit processes."""
+    import numpy as np
+
+    (h, w), comps, qtables, hmax, vmax = _decode_coefficients(blob)
     M = _dct_mat()
     zz = np.array(_ZIGZAG)
     full = []

@@ -611,9 +611,8 @@ def test_no_unallowed_unpartitioned_windows_static_sweep():
 def test_no_unallowed_driver_collects_static_sweep():
     """Companion sweep: every `.collect()` / `.toPandas()` in the package
     must be one of the audited k- or partition-bounded cases (k-means
-    seeds/centroids, 16 fixture vectors, per-partition tera stats, one
-    checksum scalar). A new driver-side materialization anywhere else
-    fails until audited."""
+    seeds/centroids, 16 fixture vectors, tera first/last keys). A new
+    driver-side materialization anywhere else fails until audited."""
     import ast
     import pathlib
 
@@ -629,8 +628,7 @@ def test_no_unallowed_driver_collects_static_sweep():
         ("queries_llm.py", "pq_distortion_audit_gate"),  # 8 codebook vectors
         ("queries_llm.py", "ann_rp_lsh_topk"),       # 16 fixture query vectors
         ("queries_llm.py", "semdedup_gate"),         # 16 fixture quantizer vectors
-        ("bench/tera.py", "teravalidate"),           # one stats row per partition
-        ("bench/tera.py", "content_checksum"),       # one scalar
+        ("bench/tera.py", "teravalidate"),           # first/last key per partition
         ("llm/bpe.py", "learn_bpe_merges"),          # 1-row argmax per merge (k-means-centroid precedent)
         ("llm/bpe.py", "learn_wordpiece_vocab"),     # 1-row argmax per merge (same precedent, r14)
         ("llm/bpe.py", "unigram_lm_em"),             # piece-grain model reads, max_pieces-capped with an eager raise (r14)
@@ -657,6 +655,41 @@ def test_no_unallowed_driver_collects_static_sweep():
 
         visit(tree, "<module>")
     assert found <= ALLOWED, f"unaudited driver collects: {sorted(found - ALLOWED)}"
+
+
+def test_teravalidate_is_one_jvm_pass(spark):
+    """TeraValidate after TeraSort runs as one partition-local JVM pass:
+    the executed plan's only shuffle is the sort's range exchange, both
+    local re-sorts survive (the nondeterministic ids between them keep
+    EliminateSorts from dropping the first), the counters ride a
+    CollectMetrics node, and no Python exec node starts a worker. It
+    takes no more jobs than the Python per-partition pass did (3 at
+    50 000 rows), and bench/tera.py never drops to the RDD API."""
+    import ast
+    import pathlib
+    import re
+
+    from hadoop_fcfs_spark.bench.tera import _validation, teragen, terasort, teravalidate
+
+    edges, _ = _validation(terasort(teragen(spark, 50_000)), "key")
+    edges.collect()
+    plan = _plan(edges).split("== Initial Plan ==")[0]
+    assert re.findall(r"Exchange (\w+)", plan) == ["rangepartitioning"], plan
+    assert len(re.findall(r"Sort \[[^\n]*\], false, 0", plan)) == 2, plan
+    assert "CollectMetrics" in plan
+    assert not re.search(r"Python|Pandas|Arrow", plan), plan
+
+    sc = spark.sparkContext
+    group = "test_plans:teravalidate"
+    sc.setJobGroup(group, group)
+    try:
+        assert teravalidate(terasort(teragen(spark, 50_000)))["ok"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+    tree = ast.parse(pathlib.Path("hadoop_fcfs_spark/bench/tera.py").read_text())
+    assert not [n for n in ast.walk(tree) if isinstance(n, ast.Attribute) and n.attr == "rdd"]
 
 
 def test_cooccurrence_is_one_explode_no_join(spark):

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_fcfs_spark.bench.tera import content_checksum, teragen, terasort, teravalidate
+from hadoop_fcfs_spark.bench.tera import teragen, terasort, teravalidate
 from hadoop_fcfs_spark.streaming.sessionize import running_counts_stateful, sessionize
 from hadoop_fcfs_spark.streaming.windows import (
     run_to_memory,
@@ -209,18 +209,31 @@ def test_sessionize_gap_semantics(spark):
 
 def test_tera_generate_sort_validate(spark):
     data = teragen(spark, 20_000, partitions=8)
-    before = content_checksum(data)
-    sorted_df = terasort(data)
-    report = teravalidate(sorted_df)
+    before = teravalidate(data)
+    report = teravalidate(terasort(data))
     assert report["ok"], "global order violated"
-    assert report["rows"] == 20_000
-    assert content_checksum(sorted_df) == before, "content changed during sort"
+    assert report["rows"] == before["rows"] == 20_000
+    assert report["checksum"] == before["checksum"], "content changed during sort"
+
+
+def test_teravalidate_checksum_covers_whole_record(spark):
+    """The checksum is TeraValidate's key+value CRC: changing one byte
+    of one record's filler changes it (a key-only CRC would not)."""
+    data = teragen(spark, 200, partitions=2)
+    one_byte = data.withColumn(
+        "filler",
+        F.when(F.col("rowid") == 123, F.overlay("filler", F.lit("Y"), 60)).otherwise(F.col("filler")),
+    )
+    assert data.exceptAll(one_byte).count() == 1  # exactly one record differs
+    before, after = teravalidate(data), teravalidate(one_byte)
+    assert after["rows"] == before["rows"] == 200
+    assert after["checksum"] != before["checksum"]
 
 
 def test_teragen_deterministic(spark):
     a = teragen(spark, 1000, partitions=4)
     b = teragen(spark, 1000, partitions=2)  # different partitioning, same content
-    assert content_checksum(a) == content_checksum(b)
+    assert teravalidate(a)["checksum"] == teravalidate(b)["checksum"]
     assert a.select(F.length("key").alias("l")).distinct().collect()[0]["l"] == 10
 
 
