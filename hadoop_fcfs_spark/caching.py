@@ -33,9 +33,10 @@ _LOCK = threading.Lock()
 _LIVE: list[DataFrame] = []
 
 
-def waypoint(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    """Persist ``df`` and track the handle for later release."""
-    out = df.persist(level)
+def waypoint(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at MEMORY_AND_DISK and track the handle for later
+    release."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     with _LOCK:
         _LIVE.append(out)
     return out
@@ -56,7 +57,3 @@ def release_waypoints() -> int:
             pass
     return n
 
-
-def live_waypoint_count() -> int:
-    with _LOCK:
-        return len(_LIVE)

@@ -21,6 +21,66 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _value_prefix(grain: DataFrame, arm_prefix: bool = False) -> DataFrame:
+    """Exclusive prefix over a value grain whose FIRST column is the
+    value: ``__before`` = rows strictly below each value (the prefix of
+    ``__c``) and, with ``arm_prefix``, ``__cabef`` = the same prefix of
+    arm a's count ``__ca``. One range-partitioned two-level scan
+    (ops.sort.global_running_sum), never an unpartitioned window."""
+    from hadoop_fcfs_spark.ops.sort import global_running_sum
+
+    k = 1 + arm_prefix
+    return global_running_sum(
+        grain, grain.columns[:1], ["__c", "__ca"][:k], ["__before", "__cabef"][:k],
+        inclusive=False,
+    )
+
+
+def _rank_grain(
+    rows: DataFrame, value: Column, arm: Column, arm_prefix: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """The value grain under the rank statistics: the reference's
+    SecondarySort shape (sort by score, one reducer scans ranks, SURVEY
+    §2.5) without a global sort or a per-row rank.
+
+    ``rows`` are the caller's filtered rows (NULL values are dropped
+    there: they are never ranked), ``value`` the aliased value
+    expression, ``arm`` the predicate of arm a. ONE map-side-combined
+    shuffle builds the grain (value, ``__ca`` = arm a's count, ``__c`` =
+    count(*)) as a waypoint, since it feeds both the prefix and the
+    totals; :func:`_value_prefix` adds ``__before`` (and ``__cabef``),
+    and ``__cb`` = c − c_a counts the other rows (arm b). Returns
+    (prefix, totals), the totals one row (``__n`` = Σc, ``__na`` = Σc_a)
+    that only the callers that broadcast it back ever run.
+
+    Tie rule: equal values share one grain row, so a tie block of c
+    rows above ``before`` lower ones holds ranks before+1 … before+c,
+    and every row of it gets the block's average rank before + (c+1)/2
+    — carried doubled as the exact integer :func:`_midrank2`."""
+    from hadoop_fcfs_spark.caching import waypoint
+
+    # __ca before __c: in the other order the grain's shuffles wrote
+    # 7-14 % more (compressed) bytes at sf0.01, with the same plan
+    grain = waypoint(
+        rows.groupBy(value).agg(
+            F.sum(F.when(arm, 1).otherwise(0)).cast("long").alias("__ca"),
+            F.count("*").cast("long").alias("__c"),
+        )
+    )
+    tot = grain.agg(
+        F.sum("__c").cast("long").alias("__n"),
+        F.sum("__ca").cast("long").alias("__na"),
+    )
+    before = _value_prefix(grain, arm_prefix)
+    return before.withColumn("__cb", F.col("__c") - F.col("__ca")), tot
+
+
+def _midrank2() -> Column:
+    """Twice the average rank of a tie block of ``__c`` rows above
+    ``__before`` lower ones: 2·before + c + 1, an exact integer."""
+    return 2 * F.col("__before") + F.col("__c") + 1
+
+
 def zscore_anomalies(
     df: DataFrame,
     group_cols: list[str],
@@ -686,24 +746,20 @@ def spearman_corr(df: DataFrame, col_x: str, col_y: str) -> DataFrame:
 
     Scale shape: ranks are NOT computed with a global row window — each
     column collapses to its distinct-VALUE grain (count per value), the
-    average rank of a value is (rows before it) + (cnt+1)/2 via an
-    EXCLUSIVE prefix sum over the grain, and rows join their rank back
-    on the value. The prefix sum runs through
-    ops.sort.global_running_sum (range-partitioned two-level scan), so
-    even a CONTINUOUS column — where the distinct-value grain is
-    data-sized — never collapses into one window task. The final
-    Pearson over rank pairs is one moment aggregation. Output: 1 row
-    (spearman rounded @6, n)."""
+    average rank of a value comes from :func:`_value_prefix` and the
+    :func:`_midrank2` tie rule, and rows join their rank back on the
+    value, so even a CONTINUOUS column — where the distinct-value grain
+    is data-sized — never collapses into one window task. The
+    per-column grain is not a waypoint (one consumer each), so it uses
+    only the prefix half of :func:`_rank_grain`. The final Pearson over
+    rank pairs is one moment aggregation. Output: 1 row (spearman
+    rounded @6, n)."""
     from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
 
     def avg_ranks(c: str, alias: str) -> DataFrame:
         grain = df.groupBy(F.col(c).alias("__v")).agg(F.count("*").alias("__c"))
-        before = global_running_sum(
-            grain, ["__v"], "__c", out_col="__before", inclusive=False
-        )
-        return before.withColumn(
-            alias, F.col("__before") + (F.col("__c") + 1) / 2.0
+        return _value_prefix(grain).withColumn(
+            alias, _midrank2() / 2.0
         ).select(F.col("__v").alias(c), alias)
     base = waypoint(df.select(col_x, col_y))
     rx = avg_ranks(col_x, "__rx")
@@ -999,12 +1055,11 @@ def mann_whitney_u(
     two-sample location test (Welch's t assumes near-normal means; this
     ranks instead, robust to outliers and skew).
 
-    Scale shape mirrors spearman_corr: collapse to the distinct-VALUE
-    grain with per-group counts, EXCLUSIVE prefix sum of combined
-    counts through ops.sort.global_running_sum gives each value's
-    rank block, and the rank-sum uses average ranks for ties — all in
-    exact BIGINT by carrying 2x quantities: 2*R_A = sum over values of
-    ca*(2*before + c + 1). Output u2 = 2*U_A exactly; z uses the
+    Scale shape: the value grain with per-group counts and its
+    exclusive prefix (:func:`_rank_grain`) give each value's rank
+    block, and the rank-sum uses average ranks for ties — all in exact
+    BIGINT by carrying 2x quantities: 2*R_A = sum over values of
+    ca * :func:`_midrank2`. Output u2 = 2*U_A exactly; z uses the
     normal approximation WITH tie correction, built from exact integer
     aggregates (sum of c^3 - c over tie groups).
 
@@ -1014,31 +1069,14 @@ def mann_whitney_u(
     rows. Beyond that, pre-quantize values to a coarser grain. NULL z
     when either arm is empty or the tie-corrected variance is 0 (all
     values identical)."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
-    grain = waypoint(
-        df.filter(
-            F.col(group_col).isin([group_a, group_b])
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(F.col(value_col).alias("__v"))
-        .agg(
-            F.sum(F.when(F.col(group_col) == group_a, 1).otherwise(0))
-            .cast("long")
-            .alias("__ca"),
-            F.sum(F.when(F.col(group_col) == group_b, 1).otherwise(0))
-            .cast("long")
-            .alias("__cb"),
-        )
-        .withColumn("__c", F.col("__ca") + F.col("__cb"))
-    )
-    before = global_running_sum(
-        grain, ["__v"], "__c", out_col="__before", inclusive=False
+    g = F.col(group_col)
+    before, _ = _rank_grain(
+        df.filter(g.isin([group_a, group_b]) & F.col(value_col).isNotNull()),
+        F.col(value_col).alias("__v"),
+        g == group_a,
     )
     agg = before.agg(
-        F.sum(F.col("__ca") * (2 * F.col("__before") + F.col("__c") + 1))
-        .alias("__r2a"),
+        F.sum(F.col("__ca") * _midrank2()).alias("__r2a"),
         F.sum("__ca").alias("__na"),
         F.sum("__cb").alias("__nb"),
         F.sum(
@@ -1089,23 +1127,23 @@ def brunner_munzel(
     distribution), BM's studentized statistic with Welch–Satterthwaite
     df is the textbook replacement.
 
-    Exactness on the MWU substrate: collapse to the distinct-VALUE
-    grain with per-group counts, ONE two-column exclusive prefix
-    (ops.sort.global_running_sum over pooled and group-A counts —
-    group B's prefix is their difference), then all rank moments are
-    exact integers on the 2x midrank scale: 2R̄ sums r2g = Σ c_g·(2·bef
-    + c + 1), and the BM rank-variance sums collapse per VALUE because
-    tied observations share both their pooled and within-group
-    midrank: with dg = 2·(pooled − within midrank) = 2bef + c − 2bef_g
-    − c_g and centered gg = n_g·dg − r2g + n_g(n_g+1), Q_g = Σ c_g·gg²
-    is an exact DECIMAL(38,0) sum and S_g² = Q_g/(4·n_g²·(n_g−1)).
-    The statistic and df are then flat float expressions over those
-    integers (identical shape both engines): with T_g =
-    Q_g/(n_g(n_g−1)), W = (n_a·r2b − n_b·r2a)/(N·√(T_a+T_b)) and df =
-    (T_a+T_b)²/(T_a²/(n_a−1) + T_b²/(n_b−1)). The common-language
-    effect estimate p̂ = P(A<B)+½P(A=B) = (r2b − n_b(n_b+1)) div
-    (2·n_a·n_b) floors to micros on nonnegative BIGINTs (r2b is
-    minimal exactly when every B ranks below every A).
+    Exactness on the MWU substrate: :func:`_rank_grain` with the
+    group-A prefix as well (pooled ``__before`` and group-A
+    ``__cabef``; group B's prefix is their difference), then all rank
+    moments are exact integers on the 2x midrank scale: 2R̄ sums r2g =
+    Σ c_g·(2·bef + c + 1), and the BM rank-variance sums collapse per
+    VALUE because tied observations share both their pooled and
+    within-group midrank: with dg = 2·(pooled − within midrank) = 2bef
+    + c − 2bef_g − c_g and centered gg = n_g·dg − r2g + n_g(n_g+1),
+    Q_g = Σ c_g·gg² is an exact DECIMAL(38,0) sum and
+    S_g² = Q_g/(4·n_g²·(n_g−1)). The statistic and df are then flat
+    float expressions over those integers (identical shape both
+    engines): with T_g = Q_g/(n_g(n_g−1)), W = (n_a·r2b −
+    n_b·r2a)/(N·√(T_a+T_b)) and df = (T_a+T_b)²/(T_a²/(n_a−1) +
+    T_b²/(n_b−1)). The common-language effect estimate p̂ =
+    P(A<B)+½P(A=B) = (r2b − n_b(n_b+1)) div (2·n_a·n_b) floors to micros
+    on nonnegative BIGINTs (r2b is minimal exactly when every B ranks
+    below every A).
 
     Integer bounds (documented; ANSI throws rather than corrupting):
     |gg| ≤ ~3·n_g·N so Q_g ≤ ~9·n_g³·N² — DECIMAL(38,0) holds it for
@@ -1114,53 +1152,30 @@ def brunner_munzel(
     when either arm has < 2 rows or both rank variances are 0 (the
     degenerate all-tied case — scipy warns, we NULL). Output: 1 row
     (n_a, n_b, phat_e6, w_e6, df_e3)."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
     dec = "decimal(38,0)"
-    grain = waypoint(
-        df.filter(
-            F.col(group_col).isin([group_a, group_b])
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(F.col(value_col).alias("__v"))
-        .agg(
-            F.sum(F.when(F.col(group_col) == group_a, 1).otherwise(0))
-            .cast("long")
-            .alias("__ca"),
-            F.sum(F.when(F.col(group_col) == group_b, 1).otherwise(0))
-            .cast("long")
-            .alias("__cb"),
-        )
-        .withColumn("__c", F.col("__ca") + F.col("__cb"))
-    )
-    before = global_running_sum(
-        grain, ["__v"], ["__c", "__ca"],
-        out_col=["__bef", "__befa"], inclusive=False,
+    g = F.col(group_col)
+    before, _ = _rank_grain(
+        df.filter(g.isin([group_a, group_b]) & F.col(value_col).isNotNull()),
+        F.col(value_col).alias("__v"),
+        g == group_a,
+        arm_prefix=True,
     )
     tot = before.agg(
         F.sum("__ca").cast("long").alias("__na"),
         F.sum("__cb").cast("long").alias("__nb"),
-        F.sum(F.col("__ca") * (2 * F.col("__bef") + F.col("__c") + 1))
-        .cast("long").alias("__r2a"),
-        F.sum(F.col("__cb") * (2 * F.col("__bef") + F.col("__c") + 1))
-        .cast("long").alias("__r2b"),
+        F.sum(F.col("__ca") * _midrank2()).cast("long").alias("__r2a"),
+        F.sum(F.col("__cb") * _midrank2()).cast("long").alias("__r2b"),
     )
     # per-value centered rank deviations need the arm totals: broadcast
-    # the 1-row scalar back over the value grain (pr_auc precedent)
+    # the 1-row scalar back over the value grain (pr_auc precedent);
+    # d_g = pooled 2x midrank − within-arm 2x midrank
+    befb = F.col("__before") - F.col("__cabef")
     cent = (
         before.crossJoin(F.broadcast(tot))
         .withColumn(
-            "__da",
-            2 * F.col("__bef") + F.col("__c")
-            - 2 * F.col("__befa") - F.col("__ca"),
+            "__da", _midrank2() - (2 * F.col("__cabef") + F.col("__ca") + 1)
         )
-        .withColumn(
-            "__db",
-            2 * F.col("__bef") + F.col("__c")
-            - 2 * (F.col("__bef") - F.col("__befa"))
-            - F.col("__cb"),
-        )
+        .withColumn("__db", _midrank2() - (2 * befb + F.col("__cb") + 1))
         .withColumn(
             "__ga",
             F.col("__na").cast(dec) * F.col("__da") - F.col("__r2a")
@@ -1302,42 +1317,35 @@ def nelson_aalen(
     the cumulative sum is EXACT BIGINT — order-independent, no ulp
     coupling between engines; accumulated quantization error is
     < #event-times·1e-9. Scale shape: subject-level aggregation to the
-    duration grain once; risk set and the running hazard both via
-    ops.sort.global_running_sum (no unpartitioned windows at any grain
-    size). Output rows at durations with exits: (t, n_risk, d_events,
-    hazard_e9 with hazard = Σ floor(1e9·d/n))."""
+    duration grain once (:func:`_rank_grain`, exits as arm a); the risk
+    set is the subject total minus the exclusive prefix and the running
+    hazard a second ops.sort.global_running_sum (no unpartitioned
+    windows at any grain size). Output rows at durations with exits:
+    (t, n_risk, d_events, hazard_e9 with hazard = Σ floor(1e9·d/n))."""
     from hadoop_fcfs_spark.caching import waypoint
     from hadoop_fcfs_spark.ops.sort import global_running_sum
 
-    grain = waypoint(
-        durations.filter(F.col(duration_col).isNotNull())
-        .groupBy(F.col(duration_col).alias("t")).agg(
-            F.sum(F.when(~F.col(censored_col), 1).otherwise(0))
-            .cast("long")
-            .alias("__d"),
-            F.count("*").cast("long").alias("__all"),
-        )
-    )
-    total = grain.agg(F.sum("__all").alias("__n"))
-    before = global_running_sum(
-        grain, ["t"], "__all", out_col="__left", inclusive=False
+    before, tot = _rank_grain(
+        durations.filter(F.col(duration_col).isNotNull()),
+        F.col(duration_col).alias("t"),
+        ~F.col(censored_col),
     )
     stepped = waypoint(
-        before.crossJoin(F.broadcast(total))
-        .withColumn("n_risk", (F.col("__n") - F.col("__left")).cast("long"))
+        before.crossJoin(F.broadcast(tot))
+        .withColumn("n_risk", (F.col("__n") - F.col("__before")).cast("long"))
         .withColumn(
             "__step_e9",
             F.floor(
-                F.col("__d").cast("double") / F.col("n_risk").cast("double")
+                F.col("__ca").cast("double") / F.col("n_risk").cast("double")
                 * 1_000_000_000.0
             ).cast("long"),
         )
     )
     cum = global_running_sum(stepped, ["t"], "__step_e9", out_col="hazard_e9")
-    return cum.filter(F.col("__d") > 0).select(
+    return cum.filter(F.col("__ca") > 0).select(
         F.col("t").cast("long").alias("t"),
         "n_risk",
-        F.col("__d").alias("d_events"),
+        F.col("__ca").alias("d_events"),
         F.col("hazard_e9").cast("long").alias("hazard_e9"),
     )
 
@@ -1946,13 +1954,11 @@ def roc_auc(df: DataFrame, score_col: str, label_col: Column | str) -> DataFrame
     the Mann-Whitney statistic rescaled: AUC = U_pos / (n_pos·n_neg).
 
     Rather than sorting rows, collapse to the distinct-SCORE grain
-    with per-class counts and take an EXCLUSIVE prefix sum of the
-    combined counts through ops.sort.global_running_sum — the same
-    scale shape as mann_whitney_u (one small shuffle on the value
-    grain + the range-partitioned prefix; no unpartitioned window,
-    no per-row rank). Carrying 2x quantities keeps everything exact
-    BIGINT: 2·R_pos = Σ ca·(2·before + c + 1) with average ranks for
-    ties, u2 = 2·U_pos = 2·R_pos − n_pos·(n_pos+1), and
+    with per-class counts and its exclusive prefix
+    (:func:`_rank_grain`, as mann_whitney_u). Carrying 2x quantities
+    keeps everything exact BIGINT: 2·R_pos = Σ ca·(2·before + c + 1)
+    with average ranks for ties (:func:`_midrank2`),
+    u2 = 2·U_pos = 2·R_pos − n_pos·(n_pos+1), and
     auc_micro = floor(u2·10⁶ / (2·n_pos·n_neg)) — one integer
     division, zero float sums, so the value is bit-identical across
     engines and partitionings.
@@ -1968,25 +1974,14 @@ def roc_auc(df: DataFrame, score_col: str, label_col: Column | str) -> DataFrame
     sort-by-score + a single reducer rank scan
     (hadoop-mapreduce-examples SecondarySort shape), done without the
     global sort."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.sum(F.when(lab, 0).otherwise(1)).cast("long").alias("__cb"),
-        )
-        .withColumn("__c", F.col("__ca") + F.col("__cb"))
-    )
-    before = global_running_sum(
-        grain, ["__v"], "__c", out_col="__before", inclusive=False
+    before, _ = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        F.col(score_col).alias("__v"),
+        lab,
     )
     agg = before.agg(
-        F.sum(F.col("__ca") * (2 * F.col("__before") + F.col("__c") + 1))
-        .alias("__r2a"),
+        F.sum(F.col("__ca") * _midrank2()).alias("__r2a"),
         F.sum("__ca").alias("__na"),
         F.sum("__cb").alias("__nb"),
     )
@@ -2017,8 +2012,8 @@ def calibration_bins(
     track the mean score within each.
 
     Binning is on the EXCLUSIVE prefix count of the distinct-score
-    grain (global_running_sum again — no global sort, no NTILE over
-    an unpartitioned window): bin = floor(before·n_bins / N). Tied
+    grain (:func:`_rank_grain` — no global sort, no NTILE over an
+    unpartitioned window): bin = floor(before·n_bins / N). Tied
     scores share one grain row and therefore always land in ONE bin —
     deterministic under any partitioning, unlike row-level NTILE
     where ties straddle bins in engine order. Bins are near-equal
@@ -2030,29 +2025,16 @@ def calibration_bins(
     Scale shape: one shuffle to the score grain, the range-partitioned
     prefix, then a groupBy over n_bins keys — map-side combinable,
     output is n_bins rows regardless of input size."""
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
-    from hadoop_fcfs_spark.caching import waypoint
-
     if n_bins < 1:
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    # waypoint: the grain feeds BOTH the prefix pass and the scalar
-    # total — without it the scan + collapse would run twice
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.count("*").cast("long").alias("__c"),
-        )
-    )
-    before = global_running_sum(
-        grain, ["__v"], "__c", out_col="__before", inclusive=False
+    before, tot = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        F.col(score_col).alias("__v"),
+        lab,
     )
     # N is not known per-row; broadcast the scalar total, then exact
     # BIGINT div (not double /) keeps bins and rates bit-identical.
-    tot = grain.agg(F.sum("__c").cast("long").alias("__n"))
     binned = before.crossJoin(F.broadcast(tot)).withColumn(
         "bin", F.expr(f"CAST(__before * {int(n_bins)} div __n AS BIGINT)")
     )
@@ -2085,10 +2067,9 @@ def brier_decomposition(
 
     The forecast is the score's EXCLUSIVE-prefix percentile
     floor(before·10⁶/N) on the distinct-score grain — calibration_bins'
-    machinery verbatim (one grain shuffle + one global_running_sum
-    range pass + broadcast scalar total; ties share a grain row, so
-    forecast and bin are deterministic under any partitioning). Per-bin
-    sums (n_b, positives_b, Σforecast_micro) stay exact BIGINT
+    :func:`_rank_grain` + broadcast scalar total (ties share a grain
+    row, so forecast and bin are deterministic under any partitioning).
+    Per-bin sums (n_b, positives_b, Σforecast_micro) stay exact BIGINT
     (bound: Σ c·f_micro ≤ N·10⁶ < 2⁶³ needs N < ~9.2e12); the three
     components are then k=n_bins-element double sums — the anova
     precedent: the only engine-ordered float arithmetic is over the
@@ -2103,26 +2084,13 @@ def brier_decomposition(
     Reference parity: no model-eval surface in the reference; this is
     the single-reducer pass a MapReduce scorer would do after
     sort-by-score (SecondarySort shape), minus the global sort."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
     if n_bins < 1:
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.count("*").cast("long").alias("__c"),
-        )
-    )
-    before = global_running_sum(
-        grain, ["__v"], "__c", out_col="__before", inclusive=False
-    )
-    tot = grain.agg(
-        F.sum("__c").cast("long").alias("__n"),
-        F.sum("__ca").cast("long").alias("__na"),
+    before, tot = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        F.col(score_col).alias("__v"),
+        lab,
     )
     binned = (
         before.crossJoin(F.broadcast(tot))
@@ -2847,38 +2815,26 @@ def cumulative_gains(
     score (negation is exact for any numeric, and turns the
     exclusive-prefix ascending grain pass into a descending binning —
     ties still share one grain row, so bin assignment stays
-    deterministic under any partitioning): one shuffle to the score
-    grain, one global_running_sum range pass, broadcast scalar
-    totals. The cumulative across bins is a triangular self-join of
-    the ≤``n_bins``-row bin table (broadcast, bounded — never a
-    window over data rows). capture_micro = cum_pos·10⁶ div total_pos
-    stays exact BIGINT (bound total_pos < ~9.2e12 — the roc_auc
-    contract); cum_lift_r6 is one flat double ratio over exact
-    integers, rounded @6, NULL when the denominators degenerate
-    (no positives / empty bin prefix).
+    deterministic under any partitioning): :func:`_rank_grain` and
+    its broadcast scalar totals. The cumulative across bins is a
+    triangular self-join of the ≤``n_bins``-row bin table (broadcast,
+    bounded — never a window over data rows). capture_micro =
+    cum_pos·10⁶ div total_pos stays exact BIGINT (bound total_pos <
+    ~9.2e12 — the roc_auc contract); cum_lift_r6 is one flat double
+    ratio over exact integers, rounded @6, NULL when the denominators
+    degenerate (no positives / empty bin prefix).
 
     Output: (bin, n, n_pos, score_lo, score_hi, cum_n, cum_pos,
     capture_micro, cum_lift_r6) — bin 0 = highest scores."""
     from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
 
     if n_bins < 1:
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy((-F.col(score_col)).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.count("*").cast("long").alias("__c"),
-        )
-    )
-    before = global_running_sum(
-        grain, ["__v"], "__c", out_col="__before", inclusive=False
-    )
-    tot = grain.agg(
-        F.sum("__c").cast("long").alias("__n"),
-        F.sum("__ca").cast("long").alias("__na"),
+    before, tot = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        (-F.col(score_col)).alias("__v"),
+        lab,
     )
     binned = before.crossJoin(F.broadcast(tot)).withColumn(
         "bin", F.expr(f"CAST(__before * {int(n_bins)} div __n AS BIGINT)")
@@ -2932,31 +2888,21 @@ def expected_calibration_error(
 
     Forecast and bins are brier_decomposition's machinery verbatim:
     exclusive-prefix percentile forecast floor(before·10⁶/N) on the
-    distinct-score grain (one grain shuffle + one global_running_sum
-    range pass + broadcast scalar total; ties never straddle bins).
-    Per-bin (n_b, positives_b, Σc·f_micro) stay exact BIGINT (bound
-    N·10⁶ < 2⁶³); the final |acc − conf| folds are doubles over the
-    fixed ≤``n_bins`` bin rows only (anova precedent), rounded @6.
+    distinct-score grain (:func:`_rank_grain` + broadcast scalar
+    total; ties never straddle bins). Per-bin (n_b, positives_b,
+    Σc·f_micro) stay exact BIGINT (bound N·10⁶ < 2⁶³); the final
+    |acc − conf| folds are doubles over the fixed ≤``n_bins`` bin rows
+    only (anova precedent), rounded @6.
 
     Output: 1 row (n, n_bins_used, ece_r6, mce_r6)."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
     if n_bins < 1:
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.count("*").cast("long").alias("__c"),
-        )
+    before, tot = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        F.col(score_col).alias("__v"),
+        lab,
     )
-    before = global_running_sum(
-        grain, ["__v"], "__c", out_col="__before", inclusive=False
-    )
-    tot = grain.agg(F.sum("__c").cast("long").alias("__n"))
     binned = before.crossJoin(F.broadcast(tot)).selectExpr(
         "__ca", "__c",
         f"CAST(__before * {int(n_bins)} div __n AS BIGINT) AS bin",
@@ -3009,16 +2955,16 @@ def kruskal_wallis(
 
     Scale shape extends the MWU grain trick one level: ONE
     map-side-combined pass collapses data to the (group, value) grain;
-    the value grain and its exclusive prefix (via
-    ops.sort.global_running_sum — no unpartitioned window) derive from
-    that without touching data again; a grain-sized equi-join hands
-    each (group, value) cell its rank block. Exact arithmetic all the
-    way to one double conversion: per-group 2x rank sums
-    2R_g = Σ cg·(2·before + c + 1) are exact BIGINT; the H numerator
-    Σ R_g²/n_g routes through DECIMAL(38,0) multiply + truncating
-    integer division (Spark `div` = DuckDB `//` on the 2x scale:
-    Σ (2R_g)² div (4·n_g), per-group truncation error < 1 — beneath
-    the e6 floor at any n), summed as BIGINT; ties Σ(c³−c) exact
+    the value grain derives from that without touching data again, so
+    it takes only the prefix half of :func:`_rank_grain`
+    (:func:`_value_prefix`); a grain-sized equi-join hands each
+    (group, value) cell its rank block. Exact arithmetic all the way
+    to one double conversion: per-group 2x rank sums
+    2R_g = Σ cg·(2·before + c + 1) (:func:`_midrank2`) are exact
+    BIGINT; the H numerator Σ R_g²/n_g routes through DECIMAL(38,0)
+    multiply + truncating integer division (Spark `div` = DuckDB `//` on
+    the 2x scale: Σ (2R_g)² div (4·n_g), per-group truncation error < 1
+    — beneath the e6 floor at any n), summed as BIGINT; ties Σ(c³−c) exact
     BIGINT. H, the tie-corrected H_c = H/(1 − ties/(N³−N)) and the
     ε² = (H − k + 1)/(N − k) effect size are flat double expressions
     of those integers (division-only, identical shape cross-engine).
@@ -3032,7 +2978,6 @@ def kruskal_wallis(
 
     Output: 1 row (k_groups, n_rows, h_e6, hc_e6, eps2_e6)."""
     from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
 
     gvg = waypoint(
         df.filter(F.col(value_col).isNotNull() & F.col(group_col).isNotNull())
@@ -3044,16 +2989,11 @@ def kruskal_wallis(
     vg = waypoint(
         gvg.groupBy("__v").agg(F.sum("__cg").cast("long").alias("__c"))
     )
-    before = global_running_sum(
-        vg, ["__v"], "__c", out_col="__before", inclusive=False
-    )
     per_g = (
-        gvg.join(before, "__v")
+        gvg.join(_value_prefix(vg), "__v")
         .groupBy("__g")
         .agg(
-            F.sum(
-                F.col("__cg") * (2 * F.col("__before") + F.col("__c") + 1)
-            ).cast("long").alias("__r2g"),
+            F.sum(F.col("__cg") * _midrank2()).cast("long").alias("__r2g"),
             F.sum("__cg").cast("long").alias("__ng"),
         )
     )
@@ -3145,9 +3085,7 @@ def roc_auc_by_group(
         "__before", F.sum("__c").over(w) - F.col("__c")
     )
     agg = before.groupBy("group").agg(
-        F.sum(F.col("__ca") * (2 * F.col("__before") + F.col("__c") + 1))
-        .cast("long")
-        .alias("__r2a"),
+        F.sum(F.col("__ca") * _midrank2()).cast("long").alias("__r2a"),
         F.sum("__ca").cast("long").alias("n_pos"),
         F.sum("__cb").cast("long").alias("n_neg"),
     )
@@ -3328,9 +3266,7 @@ def friedman_test(
     sub = kept.groupBy("__b", "__v").agg(F.count("*").cast("long").alias("__c"))
     w = Window.partitionBy("__b").orderBy("__v")
     sub = sub.withColumn("__before", F.sum("__c").over(w) - F.col("__c"))
-    ranked = kept.join(sub, ["__b", "__v"]).withColumn(
-        "__r2", 2 * F.col("__before") + F.col("__c") + 1
-    )
+    ranked = kept.join(sub, ["__b", "__v"]).withColumn("__r2", _midrank2())
     per_t = ranked.groupBy("__t").agg(
         F.sum("__r2").cast("long").alias("__r2j"),
         F.count("*").cast("long").alias("__nb"),
@@ -3438,9 +3374,7 @@ def page_trend_test(
     )
     w = Window.partitionBy("__b").orderBy("__v")
     sub = sub.withColumn("__before", F.sum("__c").over(w) - F.col("__c"))
-    ranked = kept.join(sub, ["__b", "__v"]).withColumn(
-        "__r2", 2 * F.col("__before") + F.col("__c") + 1
-    )
+    ranked = kept.join(sub, ["__b", "__v"]).withColumn("__r2", _midrank2())
     m = ranked.agg(
         F.sum(F.col("__j") * F.col("__r2")).cast("long").alias("__l2"),
         F.countDistinct("__b").cast("long").alias("__n"),
@@ -3833,8 +3767,8 @@ def effect_sizes_two_sample(
     where p-values only gatekeep (a significant z at n=10⁷ can be an
     operationally irrelevant delta; these say so).
 
-    One pass builds both: the (value)-grain with per-arm counts feeds
-    the MWU exclusive-prefix machinery for the exact 2x rank sum
+    One pass builds both: the quantized-value grain with per-arm
+    counts (:func:`_rank_grain`) gives the exact 2x rank sum
     (delta = (u2 − n_a·n_b)·10⁶ div (n_a·n_b) — exact BIGINT, one
     integer division), and the same grain's quantized moments
     (Σc·q, Σc·q²) give pooled-SD Cohen's d as a flat double of exact
@@ -3842,30 +3776,14 @@ def effect_sizes_two_sample(
     welch_ttest contract). NULL d when pooled variance is 0 or
     either arm has < 2; NULL delta when either arm is empty. Output:
     1 row (n_a, n_b, cliffs_delta_micro, cohens_d_e6)."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
-    q = F.floor(F.col(value_col) * scale).cast("long")
-    grain = waypoint(
-        df.filter(
-            F.col(group_col).isin([group_a, group_b])
-            & F.col(value_col).isNotNull()
-        )
-        .groupBy(q.alias("__q"))
-        .agg(
-            F.sum(F.when(F.col(group_col) == group_a, 1).otherwise(0))
-            .cast("long").alias("__ca"),
-            F.sum(F.when(F.col(group_col) == group_b, 1).otherwise(0))
-            .cast("long").alias("__cb"),
-        )
-        .withColumn("__c", F.col("__ca") + F.col("__cb"))
-    )
-    before = global_running_sum(
-        grain, ["__q"], "__c", out_col="__before", inclusive=False
+    g = F.col(group_col)
+    before, _ = _rank_grain(
+        df.filter(g.isin([group_a, group_b]) & F.col(value_col).isNotNull()),
+        F.floor(F.col(value_col) * scale).cast("long").alias("__q"),
+        g == group_a,
     )
     agg = before.agg(
-        F.sum(F.col("__ca") * (2 * F.col("__before") + F.col("__c") + 1))
-        .cast("long").alias("__r2a"),
+        F.sum(F.col("__ca") * _midrank2()).cast("long").alias("__r2a"),
         F.sum("__ca").cast("long").alias("__na"),
         F.sum("__cb").cast("long").alias("__nb"),
         F.sum(F.col("__ca") * F.col("__q")).cast("long").alias("__sa1"),
@@ -4642,8 +4560,8 @@ def pr_curve_interp(
 
     Exactness: thresholds live on the distinct-score grain; at the
     threshold that admits every score >= v, kept = N − count_below(v)
-    and tp = P − pos_below(v) via ONE two-column exclusive prefix
-    (ops.sort.global_running_sum). precision quantizes IMMEDIATELY to
+    and tp = P − pos_below(v) via :func:`_rank_grain` with the
+    positives' prefix as well. precision quantizes IMMEDIATELY to
     prec_micro = tp·10⁶ div kept (exact BIGINT), and because flooring
     is monotone, MAX(prec_micro) == floor-micro(MAX(tp/kept)) — the
     interpolated max needs no float comparison anywhere. The recall
@@ -4653,32 +4571,19 @@ def pr_curve_interp(
     broadcast of (points+1) checkpoint rows; output is points+1 rows.
     NULL precision at every checkpoint when P == 0 (no positives —
     precision-at-recall is undefined, not zero)."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
     if points < 1:
         raise ValueError(f"points must be >= 1, got {points}")
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.count("*").cast("long").alias("__c"),
-        )
-    )
-    before = global_running_sum(
-        grain, ["__v"], ["__c", "__ca"],
-        out_col=["__before", "__cabef"], inclusive=False,
-    )
-    tot = grain.agg(
-        F.sum("__c").cast("long").alias("__n"),
-        F.sum("__ca").cast("long").alias("__p"),
+    before, tot = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        F.col(score_col).alias("__v"),
+        lab,
+        arm_prefix=True,
     )
     thr = (
         before.crossJoin(F.broadcast(tot))
         .withColumn("__kept", F.col("__n") - F.col("__before"))
-        .withColumn("__tp", F.col("__p") - F.col("__cabef"))
+        .withColumn("__tp", F.col("__na") - F.col("__cabef"))
         .withColumn(
             "__prec", F.expr("CAST(__tp * 1000000 div __kept AS BIGINT)")
         )
@@ -4690,12 +4595,12 @@ def pr_curve_interp(
     return (
         thr.join(
             F.broadcast(ck),
-            F.col("__tp") * points >= F.col("recall_pt") * F.col("__p"),
+            F.col("__tp") * points >= F.col("recall_pt") * F.col("__na"),
         )
         .groupBy("recall_pt")
         .agg(
             F.max(
-                F.when(F.col("__p") > 0, F.col("__prec"))
+                F.when(F.col("__na") > 0, F.col("__prec"))
             ).alias("prec_interp_micro"),
         )
     )
@@ -5476,50 +5381,36 @@ def pr_auc(
     Ties contribute at their threshold's pooled precision, the
     standard grouped-ties AP formulation.
 
-    Exactness: same substrate as pr_curve_interp — score-grain
-    collapse, ONE two-column exclusive prefix
-    (ops.sort.global_running_sum) giving kept = N − below and tp = P −
-    pos_below at each threshold. Each term tp·d_pos·1e6 div (kept·P)
-    quantizes to micros INDEPENDENTLY (DECIMAL(38,0) products — at
-    1e11 rows tp·d_pos·1e6 passes BIGINT long before any driver
-    scale) and the terms SUM AS BIGINTs, so accumulation order cannot
-    matter; per-term flooring beats a common-denominator rescale
-    because kept varies per row (denominators are unbounded, unlike
-    the 11-point curve's fixed checkpoint count). ap_e6 is NULL when
-    P = 0 — undefined, not zero.
+    Exactness: same substrate as pr_curve_interp —
+    :func:`_rank_grain` with the positives' prefix, giving kept = N −
+    below and tp = P − pos_below at each threshold. Each term
+    tp·d_pos·1e6 div (kept·P) quantizes to micros INDEPENDENTLY
+    (DECIMAL(38,0) products — at 1e11 rows tp·d_pos·1e6 passes BIGINT
+    long before any driver scale) and the terms SUM AS BIGINTs, so
+    accumulation order cannot matter; per-term flooring beats a
+    common-denominator rescale because kept varies per row (denominators
+    are unbounded, unlike the 11-point curve's fixed checkpoint count).
+    ap_e6 is NULL when P = 0 — undefined, not zero.
 
     Scale shape: grain collapse + one range-partitioned prefix + one
     scalar reduce; output is ONE row (n, n_pos, ap_e6)."""
-    from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
-
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.count("*").cast("long").alias("__c"),
-        )
-    )
-    before = global_running_sum(
-        grain, ["__v"], ["__c", "__ca"],
-        out_col=["__before", "__cabef"], inclusive=False,
-    )
-    tot = grain.agg(
-        F.sum("__c").cast("long").alias("__n"),
-        F.sum("__ca").cast("long").alias("__p"),
+    before, tot = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        F.col(score_col).alias("__v"),
+        lab,
+        arm_prefix=True,
     )
     terms = (
         before.crossJoin(F.broadcast(tot))
         .withColumn("__kept", F.col("__n") - F.col("__before"))
-        .withColumn("__tp", F.col("__p") - F.col("__cabef"))
+        .withColumn("__tp", F.col("__na") - F.col("__cabef"))
         .withColumn(
             "__term",
             F.expr(
-                "CASE WHEN __ca > 0 AND __p > 0 THEN CAST("
+                "CASE WHEN __ca > 0 AND __na > 0 THEN CAST("
                 "CAST(__tp AS DECIMAL(38,0)) * __ca * 1000000"
-                " div (CAST(__kept AS DECIMAL(38,0)) * __p) AS BIGINT)"
+                " div (CAST(__kept AS DECIMAL(38,0)) * __na) AS BIGINT)"
                 " ELSE CAST(0 AS BIGINT) END"
             ),
         )
@@ -5529,9 +5420,9 @@ def pr_auc(
     # scalar gates' empty-input contract
     return terms.agg(
         F.coalesce(F.max("__n"), F.lit(0)).cast("long").alias("n"),
-        F.coalesce(F.max("__p"), F.lit(0)).cast("long").alias("n_pos"),
+        F.coalesce(F.max("__na"), F.lit(0)).cast("long").alias("n_pos"),
         F.when(
-            F.max("__p") > 0, F.sum("__term").cast("long")
+            F.max("__na") > 0, F.sum("__term").cast("long")
         ).alias("ap_e6"),
     )
 
@@ -5548,60 +5439,48 @@ def youden_j(
     threshold (deterministic; the most-sensitive of the equally-good
     cuts).
 
-    Exactness: the roc/pr substrate — distinct-score grain, ONE
-    two-column exclusive prefix (global_running_sum) giving tp = P −
-    pos_below and fp = Nneg − neg_below per threshold; TPR/FPR floor
-    to micros INDEPENDENTLY (div on nonnegative BIGINTs) so J_e6 is an
-    exact integer per threshold and the max is order-free. The scalar
-    max joins back as a broadcast 1-row cross (never a shuffled
-    self-join). NULL J/threshold when either class is empty; empty
-    slice reads (0, 0, NULL, NULL).
+    Exactness: the roc/pr substrate — :func:`_rank_grain` with the
+    positives' prefix, giving tp = P − pos_below and fp = Nneg −
+    neg_below per threshold; TPR/FPR floor to micros INDEPENDENTLY (div
+    on nonnegative BIGINTs) so J_e6 is an exact integer per threshold
+    and the max is order-free. The scalar max joins back as a broadcast
+    1-row cross (never a shuffled self-join). NULL J/threshold when
+    either class is empty; empty slice reads (0, 0, NULL, NULL).
 
     Scale shape: grain collapse + one range-partitioned prefix + two
     broadcast scalar crosses; output is ONE row (n, n_pos, j_e6,
     threshold)."""
     from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import global_running_sum
 
     lab = F.col(label_col) if isinstance(label_col, str) else label_col
-    grain = waypoint(
-        df.filter(F.col(score_col).isNotNull() & lab.isNotNull())
-        .groupBy(F.col(score_col).alias("__v"))
-        .agg(
-            F.sum(F.when(lab, 1).otherwise(0)).cast("long").alias("__ca"),
-            F.count("*").cast("long").alias("__c"),
-        )
-    )
-    before = global_running_sum(
-        grain, ["__v"], ["__c", "__ca"],
-        out_col=["__bef", "__cabef"], inclusive=False,
-    )
-    tot = grain.agg(
-        F.sum("__c").cast("long").alias("__n"),
-        F.sum("__ca").cast("long").alias("__p"),
+    before, tot = _rank_grain(
+        df.filter(F.col(score_col).isNotNull() & lab.isNotNull()),
+        F.col(score_col).alias("__v"),
+        lab,
+        arm_prefix=True,
     )
     j = waypoint(
         before.crossJoin(F.broadcast(tot))
-        .withColumn("__tp", F.col("__p") - F.col("__cabef"))
+        .withColumn("__tp", F.col("__na") - F.col("__cabef"))
         .withColumn(
             "__fp",
-            (F.col("__n") - F.col("__p"))
-            - (F.col("__bef") - F.col("__cabef")),
+            (F.col("__n") - F.col("__na"))
+            - (F.col("__before") - F.col("__cabef")),
         )
         .withColumn(
             "__j",
             F.expr(
-                "CASE WHEN __p > 0 AND __n > __p THEN "
-                "CAST(__tp * 1000000 div __p AS BIGINT)"
-                " - CAST(__fp * 1000000 div (__n - __p) AS BIGINT) END"
+                "CASE WHEN __na > 0 AND __n > __na THEN "
+                "CAST(__tp * 1000000 div __na AS BIGINT)"
+                " - CAST(__fp * 1000000 div (__n - __na) AS BIGINT) END"
             ),
         )
-        .select("__v", "__n", "__p", "__j")
+        .select("__v", "__n", "__na", "__j")
     )
     best = j.agg(F.max("__j").alias("__mj"))
     return j.crossJoin(F.broadcast(best)).agg(
         F.coalesce(F.max("__n"), F.lit(0)).cast("long").alias("n"),
-        F.coalesce(F.max("__p"), F.lit(0)).cast("long").alias("n_pos"),
+        F.coalesce(F.max("__na"), F.lit(0)).cast("long").alias("n_pos"),
         F.max("__mj").cast("long").alias("j_e6"),
         F.min(F.when(F.col("__j") == F.col("__mj"), F.col("__v")))
         .alias("threshold"),

@@ -5,8 +5,12 @@ and count the Spark jobs each query runs.
 Usage:
     python scripts/dump_plan.py r17 before dsir_selection corpus_pipeline_v4 ...
 
-Writes plans/<round>/<query>_<tag>.txt per query (the judge checks plan
-claims against these files). Each query then builds and runs (fetched
+Writes plans/<round>/<query>_<tag>.txt per query (plan claims are
+checked against these files). Each file ends with the query's
+normalized Exchange lines: those of the executed plan, cached subplans
+included, with expression ids (#123), plan ids, node numbers (12) and
+the tree drawing stripped — so plan identity between two trees is a
+`diff` of the two runs' files. Each query then builds and runs (fetched
 with toPandas, as the benchmark does) under its own job group, so the
 printed line carries its Spark job count and the shuffle bytes its
 jobs wrote next to its exchange count: a job-count or shuffle
@@ -20,6 +24,7 @@ $SPARK_GRAFT_SF_DIR).
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -45,6 +50,19 @@ def shuffle_bytes_written(sc, job_ids) -> int:
     return sum(st.shuffleWriteBytes() for st in ran if st.status().toString() == "COMPLETE")
 
 
+def exchange_lines(qe) -> list[str]:
+    """The Exchange lines of the executed plan (a waypoint's cached plan
+    included) in plan order, stripped of the ids that differ between
+    runs and of the tree drawing, whose depth moves with the
+    non-exchange nodes above each exchange."""
+    plan = qe.executedPlan().toString()
+    return [
+        re.sub(r"#\d+L?|, \[plan_id=\d+\]|\(\d+\)", "", ln).lstrip(" :+-").rstrip()
+        for ln in plan.splitlines()
+        if "Exchange" in ln
+    ]
+
+
 def main() -> None:
     rnd, tag, *names = sys.argv[1:]
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
@@ -57,7 +75,9 @@ def main() -> None:
         sc.setJobGroup(group, name)
         try:
             df = qs[name].spark_fn(spark, SF_DIR)
-            text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            qe = df._jdf.queryExecution()
+            text = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+            exchanges = exchange_lines(qe)
             rows = len(df.toPandas())
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -66,6 +86,7 @@ def main() -> None:
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(text)
+            f.write("\n== Exchange (normalized) ==\n" + "\n".join(exchanges) + "\n")
         print(
             f"wrote {path} ({text.count('Exchange (')} Exchange, {len(job_ids)} jobs, "
             f"{shuffle} shuffle bytes written, "

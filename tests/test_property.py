@@ -511,6 +511,71 @@ def test_range_scan_matches_global_window(spark, rows, parts):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+@given(
+    st.lists(
+        st.tuples(st.one_of(st.none(), st.integers(-3, 3)), st.booleans()),
+        max_size=12,
+    ),
+    st.sampled_from([2, 3, 16]),
+)
+@example([], 3)  # empty input
+@example([(1, True)], 3)  # one row
+@example([(2, True), (2, False), (2, True), (2, True)], 16)  # all ties
+@example([(None, True), (0, False), (None, False)], 2)  # NULL values
+@settings(max_examples=8, deadline=None)
+def test_rank_grain_matches_python_midranks(spark, rows, parts):
+    """The value-grain rank helper under the rank statistics == a
+    pure-Python rank table: per distinct value, its row count and the
+    counts inside and outside arm a, the rows strictly before it, arm
+    a's rows before it, and twice the average of the
+    1-based sorted positions its tie block holds; plus the one-row
+    totals. NULL values are filtered by the caller, as every caller
+    does, and are never ranked; the range count is varied past the
+    number of distinct values."""
+    from fractions import Fraction
+
+    from hadoop_fcfs_spark.caching import release_waypoints
+    from hadoop_fcfs_spark.ops.stats import _midrank2, _rank_grain
+
+    kept = sorted((v, a) for v, a in rows if v is not None)
+    want = {}
+    for u in {v for v, _ in kept}:
+        pos = [i + 1 for i, (v, _) in enumerate(kept) if v == u]
+        want[u] = (
+            len(pos),
+            sum(a for v, a in kept if v == u),
+            sum(not a for v, a in kept if v == u),
+            sum(1 for v, _ in kept if v < u),
+            sum(a for v, a in kept if v < u),
+            Fraction(2 * sum(pos), len(pos)),
+        )
+    df = spark.createDataFrame(rows, "v long, a boolean")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        before, tot = _rank_grain(
+            df.filter(F.col("v").isNotNull()),
+            F.col("v").alias("__v"),
+            F.col("a"),
+            arm_prefix=True,
+        )
+        out = before.select("*", _midrank2().alias("m2")).collect()
+        (t,) = tot.collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        release_waypoints()
+    got = {
+        r["__v"]: (
+            r["__c"], r["__ca"], r["__cb"], r["__before"], r["__cabef"], r["m2"]
+        )
+        for r in out
+    }
+    assert got == want, (rows, parts)
+    assert (t["__n"], t["__na"]) == (
+        (len(kept), sum(a for _, a in kept)) if kept else (None, None)
+    )
+
+
 @given(st.lists(st.text(alphabet="abcd", min_size=4, max_size=6), min_size=2, max_size=15, unique=True))
 @settings(max_examples=8, deadline=None)
 def test_fuzzy_term_pairs_matches_bruteforce(spark, terms):
