@@ -458,34 +458,76 @@ def chunk_documents(
     )
 
 
+def _term_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The word-count family's shared statistics, built in one tokenize
+    pass: (id, __dl, term, tf, doc_freq, __N, __avgdl) per (doc, term).
+
+    `id_col` is a document key: one row per document. tf groups on
+    (id, term) and N counts rows, so both assume it; tf_idf, bm25_scores
+    and tfidf_cosine_pairs inherit the assumption from here.
+
+    Each document is projected once to (id, tokens, dl) and exploded to
+    (id, dl, term); dl rides with the pair, so no doc-length table is
+    joined back on id. The pairs are hash-partitioned on term ONCE, and
+    both tf (grouped by (id, term, dl)) and doc_freq (count(*) over the
+    term partition) run on that one exchange; a caller's filter on term
+    pushes below the window and the aggregate. The doc-frequency figures
+    stay term-partitioned — never broadcast. (N, avgdl) is one
+    single-exchange aggregate over the doc projection (docs with no
+    tokens count in both), cross-joined as ONE broadcast scalar row;
+    Spark prunes avgdl, and the split that feeds it, when the caller
+    reads only N. explode_outer plus a non-NULL filter instead of
+    explode: for an inner explode Spark infers a non-empty-array filter
+    and pushes it below the tokens projection, which splits the text
+    again. Partitioning on term ahead of the aggregate gives up the
+    map-side combine (SCALING.md "Term statistics")."""
+    from pyspark.sql import Window
+
+    # no fan_out here: measured at sf0.1, the repartition costs more than
+    # the explode parallelism buys (tokenize-and-count is cheap per row;
+    # the shingling builders that DO fan_out pay quadratic work per doc).
+    # Two projections, so dl sizes the token array instead of splitting
+    # the text again.
+    docs = df.select(F.col(id_col), _tokens(text_col).alias("__toks")).select(
+        id_col, "__toks", F.size("__toks").alias("__dl")
+    )
+    scalars = docs.agg(
+        F.count("*").cast("double").alias("__N"), F.avg("__dl").alias("__avgdl")
+    )
+    return (
+        docs.select(id_col, "__dl", F.explode_outer("__toks").alias("term"))
+        .filter(F.col("term").isNotNull())
+        .repartition("term")
+        .groupBy(id_col, "term", "__dl")
+        .agg(F.count("*").alias("tf"))
+        .withColumn("doc_freq", F.count("*").over(Window.partitionBy("term")))
+        .crossJoin(F.broadcast(scalars))
+    )
+
+
+def _smoothed_tfidf(scale: int) -> Column:
+    """floor(tf · (ln((N+1)/(df+1)) + 1) · scale) over _term_stats columns."""
+    idf = F.log((F.col("__N") + 1) / (F.col("doc_freq") + 1)) + 1
+    return F.floor(F.col("tf") * idf * scale).cast("long")
+
+
 def tf_idf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Smoothed TF-IDF per (doc, term): tf = in-doc term count,
-    df = docs containing the term, idf = ln((N+1)/(df+1)) + 1.
-    Two word-count-shaped aggregations + a broadcast SCALAR for N. The
-    document-frequency table is vocabulary-sized (every distinct token)
-    — NEVER broadcast it; tf→dfreq→join all shuffle on `term`, so the
-    df join co-locates with no extra exchange at any corpus scale.
+    df = docs containing the term, idf = ln((N+1)/(df+1)) + 1, N = the
+    document count (`id_col` is a document key, see _term_stats).
+    A weight formula over _term_stats: one tokenize pass, one term
+    exchange for tf and doc_freq, and N as a broadcast scalar row.
     Weights in floor-micro units (note: involves ln(), so cross-engine
     equality additionally assumes matching libm rounding — observed
     exact on JVM vs DuckDB here; pure-arithmetic micro-floors elsewhere
     don't carry that assumption).
     Output: (id, term, tf, doc_freq, tfidf_e6)."""
-    toks = _tokens(text_col)
-    pairs = df.select(F.col(id_col), F.explode(toks).alias("term"))
-    tf = pairs.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("doc_freq"))
-    n_docs = df.select(F.countDistinct(id_col).alias("__N"))
-    idf = F.log((F.col("__N") + 1) / (F.col("doc_freq") + 1)) + 1
-    return (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            F.col(id_col),
-            F.col("term"),
-            F.col("tf").cast("long").alias("tf"),
-            F.col("doc_freq").cast("long").alias("doc_freq"),
-            F.floor(F.col("tf") * idf * 1_000_000).cast("long").alias("tfidf_e6"),
-        )
+    return _term_stats(df, id_col, text_col).select(
+        F.col(id_col),
+        F.col("term"),
+        F.col("tf").cast("long").alias("tf"),
+        F.col("doc_freq").cast("long").alias("doc_freq"),
+        _smoothed_tfidf(1_000_000).alias("tfidf_e6"),
     )
 
 
@@ -499,46 +541,15 @@ def bm25_scores(
         idf  = ln(1 + (N - df + 0.5) / (df + 0.5))     [non-negative]
         s    = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
 
-    `id_col` is a document key: one row per document. tf groups on
-    (id, term) and N counts rows, so both assume it.
-
-    One tokenize pass. Each document is projected once to (id, tokens,
-    dl) and exploded to (id, dl, term); dl rides with the pair, so no
-    doc-length table is joined back on id. The pairs are hash-partitioned
-    on term ONCE, and both tf (grouped by (id, term, dl)) and doc_freq
-    (count(*) over the term partition) run on that one exchange; a
-    caller's filter on term pushes below the window and the aggregate.
-    The doc-frequency figures stay term-partitioned — never broadcast.
-    (N, avgdl) is one single-exchange aggregate over the doc projection
-    (docs with no tokens count in both), cross-joined as ONE broadcast
-    scalar row. Partitioning on term ahead of the aggregate gives up the
-    map-side combine (SCALING.md "BM25"). Scores in floor-micro units;
-    cross-engine equality shares tf_idf's observed libm-ln parity.
+    A weight formula over _term_stats (`id_col` is a document key, see
+    there): one tokenize pass, one term exchange for tf and doc_freq, dl
+    carried with each pair and (N, avgdl) as one broadcast scalar row.
+    Scores in floor-micro units; cross-engine equality shares tf_idf's
+    observed libm-ln parity.
     Output: (id, term, tf, doc_freq, bm25_e6)."""
-    from pyspark.sql import Window
-
-    # no fan_out here: measured at sf0.1, the repartition costs more than
-    # the explode parallelism buys (tokenize-and-count is cheap per row;
-    # the shingling builders that DO fan_out pay quadratic work per doc).
-    # Two projections, so dl sizes the token array instead of splitting
-    # the text again.
-    docs = df.select(F.col(id_col), _tokens(text_col).alias("__toks")).select(
-        id_col, "__toks", F.size("__toks").alias("__dl")
-    )
-    pairs = docs.select(id_col, "__dl", F.explode("__toks").alias("term"))
-    tf = (
-        pairs.repartition("term")
-        .groupBy(id_col, "term", "__dl")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("doc_freq", F.count("*").over(Window.partitionBy("term")))
-    )
-    scalars = docs.agg(
-        F.count("*").cast("double").alias("__N"),
-        F.avg("__dl").alias("__avgdl"),
-    )
     idf = F.log(1 + (F.col("__N") - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5))
     denom = F.col("tf") + k1 * (1 - b + b * F.col("__dl") / F.col("__avgdl"))
-    return tf.crossJoin(F.broadcast(scalars)).select(
+    return _term_stats(df, id_col, text_col).select(
         F.col(id_col),
         F.col("term"),
         F.col("tf").cast("long").alias("tf"),
@@ -547,6 +558,25 @@ def bm25_scores(
         .cast("long")
         .alias("bm25_e6"),
     )
+
+
+def _bigrams(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
+    """(*keep, w1, w2) per adjacent token pair of each document with at
+    least two tokens: one sequence/transform explode over the token
+    array. `keep` is the columns carried with each pair (the document id
+    for per-doc scoring, none for corpus-wide model counts)."""
+    base = df.select(*keep, _tokens(text_col).alias("__t")).filter(F.size("__t") >= 2)
+    return base.select(
+        *keep,
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("__t") - 2),
+                lambda i: F.struct(
+                    F.col("__t")[i].alias("w1"), F.col("__t")[i + 1].alias("w2")
+                ),
+            )
+        ).alias("g"),
+    ).select(*keep, F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
 
 
 def bigram_lm_scores(
@@ -573,19 +603,7 @@ def bigram_lm_scores(
     """
     from hadoop_fcfs_spark.caching import waypoint
 
-    toks = _tokens(text_col)
-    base = df.select(F.col(id_col), toks.alias("__t")).filter(F.size("__t") >= 2)
-    grams = base.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__t") - 2),
-                lambda i: F.struct(
-                    F.col("__t")[i].alias("w1"), F.col("__t")[i + 1].alias("w2")
-                ),
-            )
-        ).alias("g"),
-    ).select(F.col(id_col), F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
+    grams = _bigrams(df, text_col, id_col)
     # per-doc bigram counts FIRST: repeated bigrams inside a doc collapse
     # before any join, and the three downstream consumers (model counts ×2
     # + scoring join) read one materialization (tracked waypoint)
@@ -683,20 +701,9 @@ def kn_bigram_counts(
     the scalar B. Division-only arithmetic — reproducible across
     engines (no libm).
     """
-    toks = _tokens(text_col)
-    base = df.select(toks.alias("__t")).filter(F.size("__t") >= 2)
-    grams = base.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__t") - 2),
-                lambda i: F.struct(
-                    F.col("__t")[i].alias("w1"), F.col("__t")[i + 1].alias("w2")
-                ),
-            )
-        ).alias("g")
-    ).select(F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
     from hadoop_fcfs_spark.caching import waypoint
 
+    grams = _bigrams(df, text_col)
     big_c = waypoint(grams.groupBy("w1", "w2").agg(F.count("*").alias("c12")))
     left = big_c.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count("*").alias("left_types")
@@ -785,27 +792,16 @@ def tfidf_cosine_pairs(
     scale, prefix-filter first (llm.dedup.containment/jaccard PPJoin
     tier) — this operator is the exact-scoring stage.
 
+    The weights are tf_idf's smoothed formula over _term_stats (`id_col`
+    is a document key, see there) at `quant` instead of micro units.
+
     Output: (doc_a, doc_b, shared_terms, cos_e6)."""
     from hadoop_fcfs_spark.caching import waypoint
 
-    toks = _tokens(text_col)
-    pairs = df.select(F.col(id_col), F.explode(toks).alias("term"))
-    # tf feeds TWO branches (the doc-frequency census and the weight
-    # table's own side): waypointed so the scan→explode→(id, term)
-    # aggregation runs once, not once per branch.
-    tf = waypoint(pairs.groupBy(id_col, "term").agg(F.count("*").alias("__tf")))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("__df"))
-    n_docs = df.select(F.countDistinct(id_col).alias("__N"))
-    idf = F.log((F.col("__N") + 1) / (F.col("__df") + 1)) + 1
     w = waypoint(
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("__df") * (1.0 / max_df_frac) <= F.col("__N"))
-        .select(
-            F.col(id_col),
-            "term",
-            F.floor(F.col("__tf") * idf * quant).cast("long").alias("__w"),
-        )
+        _term_stats(df, id_col, text_col)
+        .filter(F.col("doc_freq") * (1.0 / max_df_frac) <= F.col("__N"))
+        .select(F.col(id_col), "term", _smoothed_tfidf(quant).alias("__w"))
     )
     norms = w.groupBy(id_col).agg(F.sum(F.col("__w") * F.col("__w")).alias("__n2"))
     a = w.select(F.col(id_col).alias("doc_a"), "term", F.col("__w").alias("__wa"))

@@ -901,13 +901,14 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_TOKS},
     tf AS (SELECT doc_id, w AS term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
     dfq AS (SELECT term, COUNT(*) AS doc_freq FROM tf GROUP BY 1),
-    nn AS (SELECT COUNT(DISTINCT doc_id) AS N FROM documents)
+    nn AS (SELECT COUNT(*) AS N FROM documents)
     SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, CAST(doc_freq AS BIGINT) AS doc_freq,
            CAST(FLOOR(tf * (ln((N + 1) / (doc_freq + 1)) + 1) * 1000000) AS BIGINT) AS tfidf_e6
     FROM tf JOIN dfq USING (term) CROSS JOIN nn
     """,
-    doc="Smoothed TF-IDF per (doc, term): two word-count-shaped "
-    "aggregations (tf, df) + broadcast corpus size; idf = ln((N+1)/(df+1))+1, "
+    doc="Smoothed TF-IDF per (doc, term) over the term-statistics kernel "
+    "(llm.textan._term_stats): one tokenize pass, tf and df on one term "
+    "exchange + the broadcast document count N; idf = ln((N+1)/(df+1))+1, "
     "weights floor-micro.",
 )
 def tf_idf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2541,7 +2542,7 @@ def script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
            FROM toks GROUP BY 1, 2),
     dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-    nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM documents),
+    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
     w AS (
       SELECT doc_id, term,
              CAST(FLOOR(tf * (ln((n + 1) / (df + 1)) + 1) * 1000) AS BIGINT) AS w
@@ -3693,7 +3694,7 @@ def corpus_qa_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_TOKS},
     tf AS (SELECT doc_id, w AS term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
     dfq AS (SELECT term, COUNT(*) AS doc_freq FROM tf GROUP BY 1),
-    nn AS (SELECT COUNT(DISTINCT doc_id) AS N FROM documents),
+    nn AS (SELECT COUNT(*) AS N FROM documents),
     wts AS (
       SELECT doc_id, term,
              CAST(FLOOR(tf * (ln((N + 1) / (doc_freq + 1)) + 1) * 1000000)

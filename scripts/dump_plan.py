@@ -16,7 +16,13 @@ printed line carries its Spark job count and the shuffle bytes its
 jobs wrote next to its exchange count: a job-count or shuffle
 regression shows in seconds, without a benchmark run. Both include the
 eager jobs the plan build launches; a stage listed by several jobs
-counts once, and a skipped stage not at all. Uses the same
+counts once, and a skipped stage not at all. Every table of the sf dir
+is opened before the first query: a table's first `spark.read.parquet`
+runs a one-off schema job (its footer read), which would otherwise
+land on whichever query reads that table first, so a query's job count
+does not depend on where it sits in argv. Each run has its own job
+group (its argv position is part of the name), so a query named twice
+is counted twice, not summed. Uses the same
 session defaults as bench.py (local[$SPARK_GRAFT_CPUS], sf dir from
 $SPARK_GRAFT_SF_DIR).
 """
@@ -32,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from hadoop_fcfs_spark.caching import release_waypoints  # noqa: E402
 from hadoop_fcfs_spark.registry import all_queries  # noqa: E402
 from hadoop_fcfs_spark.session import get_spark  # noqa: E402
+from hadoop_fcfs_spark.tables import register_views  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -70,8 +77,9 @@ def main() -> None:
     spark = get_spark("dump_plan")
     sc = spark.sparkContext
     qs = dict(all_queries())
-    for name in names:
-        group = f"dump_plan:{tag}:{name}"
+    register_views(spark, SF_DIR)
+    for pos, name in enumerate(names):
+        group = f"dump_plan:{tag}:{pos}:{name}"
         sc.setJobGroup(group, name)
         try:
             df = qs[name].spark_fn(spark, SF_DIR)

@@ -5,6 +5,7 @@ way a human plan audit does."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_fcfs_spark.registry import all_queries
@@ -466,30 +467,37 @@ def test_weighted_sample_bounded_plans(spark):
     assert "WindowGroupLimit" in s
 
 
-def test_bm25_no_vocabulary_broadcast(spark):
-    """Top-20 must be TakeOrderedAndProject (not a global sort) and the
-    plan must carry no cartesian beyond the 1-row scalar cross join,
-    with documents tokenized once.
+@pytest.mark.parametrize("gate", ["bm25_retrieval", "tf_idf"])
+def test_bm25_no_vocabulary_broadcast(spark, gate):
+    """The term-statistics kernel under BM25 and TF-IDF: no cartesian
+    beyond the 1-row scalar cross join, and documents tokenized once.
+    BM25's top-20 must be TakeOrderedAndProject (not a global sort).
     (AQE legitimately broadcasts the vocab-sized tables at sf0.01; the
     scale contract — never FORCE that broadcast — lives in the code,
     which only hints F.broadcast on the scalar row.)"""
-    df = Q["bm25_retrieval"].spark_fn(spark, SF_ORACLE)
+    bm25 = gate == "bm25_retrieval"
+    df = Q[gate].spark_fn(spark, SF_ORACLE)
     plan = _plan(df)
-    assert "TakeOrderedAndProject" in plan  # top-20, not a global sort
+    assert ("TakeOrderedAndProject" in plan) == bm25
     assert "CartesianProduct" not in plan
     # the only explicit broadcast HINT is the scalar: check the optimized
     # logical plan carries exactly one user hint
     assert _optimized(df).count("UnresolvedHint broadcast") <= 1
     # one tokenize pass: a single explode feeds tf and doc_freq, dl rides
     # with the (id, term) pair instead of a doc-length table joined back
-    # on id, and the shuffles are the term partitioning, the (N, avgdl)
-    # scalar and the final per-doc sum
+    # on id, and the shuffles are the term partitioning, the scalar row
+    # and (BM25) the final per-doc sum
     nodes = [l.lstrip(" :+-") for l in plan.splitlines()]
     assert sum(n.startswith("Generate ") for n in nodes) == 1
     joins = [n for n in nodes if "Join" in n.split(" ", 1)[0]]
     assert not any("doc_id#" in n for n in joins), joins
     shuffles = [n for n in nodes if n.startswith("Exchange ")]
     assert len(shuffles) <= 3, shuffles
+    # each text is split once per branch that reads it: the term branch,
+    # plus BM25's avgdl branch (tf_idf reads only N, so that split prunes)
+    qe = df._jdf.queryExecution()
+    formatted = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+    assert 1 <= formatted.count("split(") <= (2 if bm25 else 1)
 
 
 def test_merge_upsert_single_outer_join(spark):

@@ -2880,10 +2880,12 @@ def test_ks_group_drift_matches_python_reference_ordered(spark, rows):
     assert got == _py_ks_group_drift(rows)
 
 
-def _py_bm25(texts, k1=1.2, b=0.75):
-    """Okapi BM25 per (doc, term) in plain Python, in the kernel's
-    floating-point operation order: N counts every document, and a doc
-    with no tokens adds 0 to avgdl."""
+def _py_term_stats(texts, k1=1.2, b=0.75):
+    """The term-statistics kernel and both of its weight formulas in
+    plain Python: per (doc, term) its tf and doc_freq, the smoothed
+    TF-IDF micro-weight and the Okapi BM25 micro-score, each in the
+    kernel's floating-point operation order. N counts every document,
+    and a doc with no tokens adds 0 to avgdl."""
     import math
     import re
     from collections import Counter
@@ -2892,14 +2894,16 @@ def _py_bm25(texts, k1=1.2, b=0.75):
     n = float(len(toks))
     avgdl = sum(len(t) for t in toks) / n
     dfreq = Counter(w for t in toks for w in set(t))
-    out = set()
+    tfidf, bm25 = set(), set()
     for i, t in enumerate(toks):
         for w, tf in Counter(t).items():
             d = dfreq[w]
+            idf = math.log((n + 1) / (d + 1)) + 1
+            tfidf.add((i, w, tf, d, math.floor(tf * idf * 1_000_000)))
             idf = math.log((n - d + 0.5) / (d + 0.5) + 1.0)
             denom = tf + k1 * ((b * len(t)) / avgdl + (1 - b))
-            out.add((i, w, tf, d, math.floor(idf * (tf * (k1 + 1) / denom) * 1_000_000.0)))
-    return out
+            bm25.add((i, w, tf, d, math.floor(idf * (tf * (k1 + 1) / denom) * 1_000_000.0)))
+    return tfidf, bm25
 
 
 @given(
@@ -2911,20 +2915,27 @@ def _py_bm25(texts, k1=1.2, b=0.75):
 @example(["b a b b", "\t\n", "a", ""], 16)  # more partitions than pairs
 @settings(max_examples=5, deadline=None)
 def test_bm25_scores_matches_python_okapi(spark, texts, parts):
-    """bm25_scores == a pure-Python Okapi BM25 (k1=1.2, b=0.75, floor
-    micro-units) on small corpora with empty and whitespace-only docs,
-    repeated terms and single-doc corpora; the answer must not depend on
-    the shuffle partition count."""
-    from hadoop_fcfs_spark.llm.textan import bm25_scores
+    """bm25_scores and tf_idf == a pure-Python Okapi BM25 (k1=1.2,
+    b=0.75) and smoothed TF-IDF (idf = ln((N+1)/(df+1)) + 1), in floor
+    micro-units, on small corpora with empty and whitespace-only docs,
+    repeated terms and single-doc corpora; both read one term-statistics
+    kernel, and neither answer may depend on the shuffle partition
+    count."""
+    from hadoop_fcfs_spark.llm.textan import bm25_scores, tf_idf
 
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    want_tfidf, want_bm25 = _py_term_stats(texts)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
-        out = bm25_scores(df, "doc_id", "text")
-        assert out.columns == ["doc_id", "term", "tf", "doc_freq", "bm25_e6"]
-        got = [tuple(r) for r in out.collect()]
+        for fn, score, want in (
+            (tf_idf, "tfidf_e6", want_tfidf),
+            (bm25_scores, "bm25_e6", want_bm25),
+        ):
+            out = fn(df, "doc_id", "text")
+            assert out.columns == ["doc_id", "term", "tf", "doc_freq", score]
+            got = [tuple(r) for r in out.collect()]
+            assert len(got) == len(set(got))
+            assert set(got) == want, fn.__name__
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert len(got) == len(set(got))
-    assert set(got) == _py_bm25(texts)
