@@ -30,7 +30,16 @@ from pyspark.sql import functions as F
 
 
 def _gram_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, gram) distinct pairs — the posting list.
+    """(doc, gram) distinct pairs — the posting list.
+
+    Documents move, shingles do not: (id, text) is hash-partitioned on
+    the id into the session's default parallelism BEFORE the split, so
+    every row of one id lands in one partition and the explode, the
+    (doc, gram) distinct and every per-doc aggregate above it
+    (signatures, gram sets, set sizes) run with no further exchange —
+    hashpartitioning(doc) satisfies their ClusteredDistribution. The
+    fixed count keeps AQE from coalescing the shingle stage into one
+    task, which also spreads a one-file source over the cores.
 
     The split array is bound to a projected column FIRST, so codegen
     evaluates the regex split once per row; building shingles via
@@ -41,11 +50,13 @@ def _gram_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     # for leading whitespace / consecutive separators) — so shingles are
     # defined over the clean token sequence and agree with the ANSI-SQL
     # oracles' list_filter(regexp_split_to_array(text,'\s+'), w -> w <> '').
-    from hadoop_fcfs_spark.tables import fan_out
-
-    words_df = fan_out(df).select(
-        F.col(id_col).alias("doc"),
-        F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")).alias("__w"),
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    docs = df.select(
+        F.col(id_col).alias("doc"), F.col(text_col).alias("__text")
+    ).repartition(parallelism, "doc")
+    words_df = docs.select(
+        "doc",
+        F.filter(F.split(F.col("__text"), r"\s+"), lambda x: x != F.lit("")).alias("__w"),
     )
     w = F.col("__w")
     if n == 1:

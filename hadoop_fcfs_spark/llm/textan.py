@@ -483,11 +483,12 @@ def _term_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     map-side combine (SCALING.md "Term statistics")."""
     from pyspark.sql import Window
 
-    # no fan_out here: measured at sf0.1, the repartition costs more than
-    # the explode parallelism buys (tokenize-and-count is cheap per row;
-    # the shingling builders that DO fan_out pay quadratic work per doc).
-    # Two projections, so dl sizes the token array instead of splitting
-    # the text again.
+    # no repartition ahead of the tokenize: measured at sf0.1, a
+    # round-robin fan-out cost more than the explode parallelism buys
+    # (tokenize-and-count is cheap per row), and the one exchange the
+    # statistics need is on term, not on the document id the shingle
+    # kernel partitions by. Two projections, so dl sizes the token
+    # array instead of splitting the text again.
     docs = df.select(F.col(id_col), _tokens(text_col).alias("__toks")).select(
         id_col, "__toks", F.size("__toks").alias("__dl")
     )

@@ -12,17 +12,22 @@ included, with expression ids (#123), plan ids, node numbers (12) and
 the tree drawing stripped — so plan identity between two trees is a
 `diff` of the two runs' files. Each query then builds and runs (fetched
 with toPandas, as the benchmark does) under its own job group, so the
-printed line carries its Spark job count and the shuffle bytes its
-jobs wrote next to its exchange count: a job-count or shuffle
-regression shows in seconds, without a benchmark run. Both include the
-eager jobs the plan build launches; a stage listed by several jobs
-counts once, and a skipped stage not at all. Every table of the sf dir
-is opened before the first query: a table's first `spark.read.parquet`
+printed line carries its Spark job count, the shuffle bytes its jobs
+wrote and the executor CPU seconds their tasks used next to its
+exchange count: a job-count, shuffle or CPU regression shows in
+seconds, without a benchmark run. All three include the eager jobs the
+plan build launches; a stage listed by several jobs counts once, and a
+skipped stage not at all. Every table of the sf dir is opened before
+the first query: a table's first `spark.read.parquet`
 runs a one-off schema job (its footer read), which would otherwise
 land on whichever query reads that table first, so a query's job count
 does not depend on where it sits in argv. Each run has its own job
 group (its argv position is part of the name), so a query named twice
-is counted twice, not summed. Uses the same
+is counted twice, not summed; the executor CPU of a query's first run
+in the session includes its JIT and whole-stage code-generation
+warm-up (at sf0.1 `dedup_minhash_lsh` used 5-8 s first, 1.4-2.6 s
+after), so compare CPU over the later runs of a query named several
+times. Uses the same
 session defaults as bench.py (local[$SPARK_GRAFT_CPUS], sf dir from
 $SPARK_GRAFT_SF_DIR).
 """
@@ -43,9 +48,11 @@ from hadoop_fcfs_spark.tables import register_views  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def shuffle_bytes_written(sc, job_ids) -> int:
-    """Shuffle bytes written by the stages of `job_ids` that ran, read
-    from the application status store once its listener has caught up."""
+def stage_totals(sc, job_ids) -> tuple[int, float]:
+    """Shuffle bytes written and executor CPU seconds of the stages of
+    `job_ids` that ran, read from the application status store once its
+    listener has caught up. A stage listed by several jobs counts once,
+    a skipped stage not at all."""
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
@@ -53,8 +60,11 @@ def shuffle_bytes_written(sc, job_ids) -> int:
     for job in job_ids:
         ids = store.job(job).stageIds()
         stages.update(ids.apply(i) for i in range(ids.size()))
-    ran = (store.lastStageAttempt(s) for s in stages)
-    return sum(st.shuffleWriteBytes() for st in ran if st.status().toString() == "COMPLETE")
+    ran = [st for st in (store.lastStageAttempt(s) for s in stages)
+           if st.status().toString() == "COMPLETE"]
+    shuffle = sum(st.shuffleWriteBytes() for st in ran)
+    cpu_ns = sum(st.executorCpuTime() for st in ran)
+    return shuffle, cpu_ns / 1e9
 
 
 def exchange_lines(qe) -> list[str]:
@@ -90,14 +100,14 @@ def main() -> None:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         job_ids = sc.statusTracker().getJobIdsForGroup(group)
-        shuffle = shuffle_bytes_written(sc, job_ids)
+        shuffle, cpu_s = stage_totals(sc, job_ids)
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(text)
             f.write("\n== Exchange (normalized) ==\n" + "\n".join(exchanges) + "\n")
         print(
             f"wrote {path} ({text.count('Exchange (')} Exchange, {len(job_ids)} jobs, "
-            f"{shuffle} shuffle bytes written, "
+            f"{shuffle} shuffle bytes written, {cpu_s:.3f} executor CPU s, "
             f"{text.count('Scan parquet')} parquet scans, {rows} rows)"
         )
         release_waypoints()

@@ -212,6 +212,32 @@ def test_minhash_signature_index_cached(spark):
     assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
 
 
+@pytest.mark.parametrize("gate", ["dedup_minhash_lsh", "dedup_ngram_jaccard"])
+def test_shingles_follow_one_doc_key_shuffle(spark, gate):
+    """The shingle kernel moves documents, not grams: one hash
+    repartition of (id, text) on the id, no round-robin fan-out, and no
+    exchange on doc or (doc, gram) above it — the gram distinct, the
+    signature / gram-set aggregate and the set sizes all ride the doc
+    partitioning. Distinct normalized Exchange lines, so the cached
+    signature plan, printed under each of its consumers, counts once."""
+    import re
+
+    from scripts.dump_plan import exchange_lines
+
+    df = Q[gate].spark_fn(spark, SF_ORACLE)
+    lines = set(exchange_lines(df._jdf.queryExecution()))
+    assert not any("RoundRobinPartitioning" in ln for ln in lines), lines
+    assert not any(
+        re.search(r"hashpartitioning\(doc(, gram\w*)?, \d+\), ENSURE_REQUIREMENTS", ln)
+        for ln in lines
+    ), lines
+    by_doc = [
+        ln for ln in lines
+        if re.fullmatch(r"Exchange hashpartitioning\(doc, \d+\), REPARTITION_BY_NUM", ln)
+    ]
+    assert len(by_doc) == 1, lines
+
+
 def test_forecast_revenue_full_pushdown(spark):
     df = Q["forecast_revenue"].spark_fn(spark, SF_ORACLE)
     full = _optimized(df)

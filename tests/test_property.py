@@ -4,6 +4,7 @@ checked against an independent Python reference implementation."""
 
 from __future__ import annotations
 
+import re
 import zlib
 from itertools import groupby
 
@@ -2939,3 +2940,70 @@ def test_bm25_scores_matches_python_okapi(spark, texts, parts):
             assert set(got) == want, fn.__name__
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _py_shingles(rows, n):
+    """Pure-Python (id, gram) posting list: whitespace tokens with the
+    empty ones dropped, word n-grams joined by one space, docs shorter
+    than n contribute nothing, NULL text nothing, and each (id, gram)
+    pair once — a NULL id is one id like any other."""
+    out = set()
+    for i, text in rows:
+        if text is None:
+            continue
+        toks = [w for w in re.split(r"\s+", text) if w]
+        out.update((i, " ".join(toks[k : k + n])) for k in range(len(toks) - n + 1))
+    return out
+
+
+_shingle_text = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(["a", "b", "c", " ", "  ", "\t", "\n"]), max_size=10).map("".join),
+)
+
+
+@given(
+    st.lists(st.tuples(st.one_of(st.none(), st.integers(0, 4)), _shingle_text), max_size=8),
+    st.sampled_from([1, 2, 3]),
+    st.sampled_from([1, 7]),
+    st.sampled_from([2, 3, 16]),
+)
+@example([(0, None), (1, ""), (2, " \t\n ")], 2, 1, 3)  # NULL, empty, whitespace-only
+@example([(0, "a b"), (1, "a")], 3, 7, 16)  # every doc shorter than n
+@example([(0, "a a a a"), (0, "a a b"), (None, "b a a"), (None, "a a")], 2, 7, 2)  # repeats, dup and NULL ids
+@settings(max_examples=8, deadline=None)
+def test_gram_rows_matches_python_shingler(spark, rows, n, in_parts, parts):
+    """The shingle kernel == a pure-Python shingler on NULL, empty and
+    whitespace-only text, docs shorter than n, repeated grams, duplicate
+    and NULL ids, over 1 and 7 input partitions and 2/3/16 shuffle
+    partitions; and minhash_signatures over each of those layouts ==
+    the signature aggregate of the Python posting list read from one
+    partition, so no layout moves a signature."""
+    from hadoop_fcfs_spark.llm.dedup import _gram_rows, _minhash_sig_expr, minhash_signatures
+
+    want = _py_shingles(rows, n)
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, in_parts), "doc_id long, text string"
+    )
+    ref = spark.createDataFrame(
+        spark.sparkContext.parallelize(sorted(want, key=repr), 1), "doc long, gram string"
+    )
+    want_sig = {
+        (r["doc"], tuple(r["sig"]))
+        for r in ref.select("doc", F.xxhash64("gram").alias("gram_h"))
+        .groupBy("doc")
+        .agg(F.expr(_minhash_sig_expr(4)).alias("sig"))
+        .collect()
+    }
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        got = [(r["doc"], r["gram"]) for r in _gram_rows(df, "doc_id", "text", n).collect()]
+        sig = [
+            (r["doc"], tuple(r["sig"]))
+            for r in minhash_signatures(df, "doc_id", "text", n, num_hashes=4).collect()
+        ]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert len(got) == len(set(got)) and set(got) == want, (rows, n)
+    assert len(sig) == len(set(sig)) and set(sig) == want_sig, (rows, n)
