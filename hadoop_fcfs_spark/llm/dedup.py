@@ -101,6 +101,49 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str, normalize: bool = Tru
 # ---------------------------------------------------------------------------
 
 
+def _shared_grams(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_doc_freq: int | None,
+    keep_pair: Column,
+) -> DataFrame:
+    """(doc_a, doc_b, common, na, nb): the pairs `keep_pair` keeps among
+    documents sharing ≥1 word n-gram, with the shared-gram count and
+    both gram-set sizes. Each size rides its (doc, gram) row as a
+    per-doc window count, which needs no exchange (the gram table is
+    already partitioned by doc): the two join sides are the gram
+    table's only readers, with no sizes aggregate to shingle the text
+    again and no sizes joins. A waypoint on the gram table would shingle
+    once but cost more jobs: at sf0.01, 6 in place of 3 on
+    `dedup_ngram_jaccard` and 62 in place of 32 on `near_dedup_clustered`.
+
+    `max_doc_freq` drops shingles occurring in more than that many docs
+    (stop-shingle skew guard — they contribute O(df²) join rows and
+    almost no signal); the sizes count what is left."""
+    from pyspark.sql import Window
+
+    grams = _gram_rows(df, id_col, text_col, n)
+    if max_doc_freq is not None:
+        rare = (
+            grams.groupBy("gram")
+            .agg(F.count("*").alias("df"))
+            .filter(F.col("df") <= max_doc_freq)
+            .select("gram")
+        )
+        grams = grams.join(rare, "gram", "left_semi")
+    sized = grams.withColumn("__n", F.count("*").over(Window.partitionBy("doc")))
+    a = sized.select(F.col("doc").alias("doc_a"), "gram", F.col("__n").alias("na"))
+    b = sized.select(F.col("doc").alias("doc_b"), "gram", F.col("__n").alias("nb"))
+    return (
+        a.join(b, "gram")
+        .filter(keep_pair)
+        .groupBy("doc_a", "doc_b", "na", "nb")
+        .agg(F.count("*").alias("common"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -116,33 +159,12 @@ def ngram_jaccard_pairs(
     `max_doc_freq` drops shingles occurring in more than that many
     docs (stop-shingle skew guard — they contribute O(df²) join rows
     and almost no signal)."""
-    grams = _gram_rows(df, id_col, text_col, n)
-    if max_doc_freq is not None:
-        rare = (
-            grams.groupBy("gram")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("gram")
-        )
-        grams = grams.join(rare, "gram", "left_semi")
-    sizes = grams.groupBy("doc").agg(F.count("*").alias("n_grams"))
-
-    a = grams.select(F.col("doc").alias("doc_a"), "gram")
-    b = grams.select(F.col("doc").alias("doc_b"), "gram")
-    inter = (
-        a.join(b, "gram")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("common"))
+    pairs = _shared_grams(
+        df, id_col, text_col, n, max_doc_freq, F.col("doc_a") < F.col("doc_b")
     )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_grams").alias("na"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_grams").alias("nb"))
     jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return pairs.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -169,36 +191,15 @@ def containment_pairs(
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    grams = _gram_rows(df, id_col, text_col, n)
-    if max_doc_freq is not None:
-        rare = (
-            grams.groupBy("gram")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("gram")
-        )
-        grams = grams.join(rare, "gram", "left_semi")
-    sizes = grams.groupBy("doc").agg(F.count("*").alias("n_grams"))
-
-    a = grams.select(F.col("doc").alias("doc_a"), "gram")
-    b = grams.select(F.col("doc").alias("doc_b"), "gram")
-    inter = (
-        a.join(b, "gram")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("common"))
+    pairs = _shared_grams(
+        df, id_col, text_col, n, max_doc_freq, F.col("doc_a") != F.col("doc_b")
     )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_grams").alias("na"))
     cont = F.col("common") / F.col("na")  # containment of a in b
-    return (
-        inter.join(sa, "doc_a")
-        .select(
-            F.col("doc_a").alias("doc_small"),
-            F.col("doc_b").alias("doc_big"),
-            F.round(cont, 4).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
+    return pairs.select(
+        F.col("doc_a").alias("doc_small"),
+        F.col("doc_b").alias("doc_big"),
+        F.round(cont, 4).alias("containment"),
+    ).filter(F.col("containment") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -291,9 +292,11 @@ def minhash_lsh_pairs(
         F.expr(_minhash_sig_expr(num_hashes)).alias("sig"),
         F.collect_set("gram_h").alias("gram_set"),
     )
-    # sig feeds THREE consumers (banding + both verify probes); without a
-    # persist the scan→shingle→64-hash aggregation executes once per
-    # consumer (no ReusedExchange: the branches differ structurally).
+    # sig is scanned FOUR times (both banding join sides + both verify
+    # probes); without a persist the scan→shingle→64-hash aggregation
+    # executes once per scan (no ReusedExchange: the branches differ
+    # structurally). The waypoint builds it in one job before the scans
+    # are planned, so none of the four submits a build of its own.
     # One row per doc (64 longs + the doc's gram-hash set) — comparable
     # to the corpus itself, so MEMORY_AND_DISK is safe at any scale where
     # the corpus is storable; this is the "store the signature index"
@@ -654,19 +657,12 @@ def jaccard_prefix_pairs(
         .withColumn("__sz", F.count("*").over(Window.partitionBy("doc")))
         .select("doc", "gram_h", "__rn", "__sz")
     )
-    # r17 adjudication of the arrays-aggregation exchange above this
-    # cache (the r16 residual): an unmaterialized waypoint is an
-    # InMemoryRelation(AdaptiveSparkPlan) reporting UnknownPartitioning,
-    # so the verify-arrays aggregation re-exchanges the gram table by
-    # doc. Two fixes were built and measured: repartition("doc") before
-    # the persist does NOT help (the AQE wrapper still hides the
-    # partitioning), and eager materialization (ranked.count() before
-    # planning consumers) DOES elide the exchange (plan verified, gates
-    # green) but costs a serial cache-build barrier ≈ the exchange
-    # locally — pristine interleaved min-of-4: 2.00/2.19 s lazy vs
-    # 2.27/2.33 s eager, a consistent ~12 % bench regression — so the
-    # lazy shape stays. Revisit on a cluster where a network shuffle of
-    # the gram table costs more than a local cache re-read.
+    # The verify-arrays aggregation below needs no exchange on doc
+    # because caching.waypoint builds this cache before its consumers
+    # are planned, and a built cache reports its doc partitioning. An
+    # unbuilt one is an InMemoryRelation(AdaptiveSparkPlan) reporting
+    # UnknownPartitioning (a repartition("doc") before the persist does
+    # not change that), which re-exchanged the gram table by doc.
     lprefix = (
         F.col("__sz")
         - F.expr(f"({p}L * __sz + {q - 1}L) DIV {q}L")

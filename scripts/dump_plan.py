@@ -7,10 +7,15 @@ Usage:
 
 Writes plans/<round>/<query>_<tag>.txt per query (plan claims are
 checked against these files). Each file ends with the query's
-normalized Exchange lines: those of the executed plan, cached subplans
-included, with expression ids (#123), plan ids, node numbers (12) and
-the tree drawing stripped — so plan identity between two trees is a
-`diff` of the two runs' files. Each query then builds and runs (fetched
+normalized Exchange lines: those of `plan_lines`, the executed plan
+with each cached relation's plan read once (its final plan when the
+waypoint is built), with expression ids (#123), plan ids and node
+numbers (12) stripped — so plan identity between two trees is a
+`diff` of the two runs' files; the printed Exchange and parquet-scan
+counts come from the same lines. The printed plan length is that of
+`executedPlan().toString()` once the plan is built, the string AQE
+posts to the listener bus at the query's start and again, grown, on
+every plan update. Each query then builds and runs (fetched
 with toPandas, as the benchmark does) under its own job group, so the
 printed line carries its Spark job count, the shuffle bytes its jobs
 wrote and the executor CPU seconds their tasks used next to its
@@ -37,6 +42,8 @@ from __future__ import annotations
 import os
 import re
 import sys
+
+from pyspark import SparkContext
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -67,15 +74,56 @@ def stage_totals(sc, job_ids) -> tuple[int, float]:
     return shuffle, cpu_ns / 1e9
 
 
-def exchange_lines(qe) -> list[str]:
-    """The Exchange lines of the executed plan (a waypoint's cached plan
-    included) in plan order, stripped of the ids that differ between
-    runs and of the tree drawing, whose depth moves with the
-    non-exchange nodes above each exchange."""
-    plan = qe.executedPlan().toString()
+def _seq(xs) -> list:
+    return [xs.apply(i) for i in range(xs.size())]
+
+
+def plan_lines(qe) -> list[str]:
+    """The executed plan one node per line, in the order
+    `executedPlan().toString()` prints it, without the tree drawing,
+    reading each cached relation once.
+
+    The string prints a built AQE plan twice (its final and its initial
+    plan) and a cache under every scan of it, so its length doubles with
+    each level of nested built waypoints. Here an AQE plan shows its
+    current plan (the final one once it ran), a query stage the plan it
+    wraps, and an `InMemoryTableScan` its relation, followed by that
+    relation's cached plan only the first time the cache is met: each
+    line is a node that runs, once."""
+    width = qe.sparkSession().sessionState().conf().maxToStringFields()
+    identity = SparkContext._jvm.System.identityHashCode
+    seen: set[int] = set()
+    lines: list[str] = []
+    stack = [qe.executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind in ("WholeStageCodegenExec", "InputAdapter"):
+            stack.append(node.child())  # printed as a `*(n)` prefix only
+            continue
+        lines.append(node.verboseString(width))
+        if kind == "AdaptiveSparkPlanExec":
+            inner = [node.executedPlan()]
+        elif kind.endswith("QueryStageExec"):
+            inner = [node.plan()]
+        elif kind == "InMemoryTableScanExec":
+            rel = node.relation()
+            lines.append(rel.verboseString(width))
+            key = identity(rel.cacheBuilder())
+            inner = [] if key in seen else [rel.cachedPlan()]
+            seen.add(key)
+        else:
+            inner = _seq(node.children())
+        stack.extend(reversed(_seq(node.subqueries()) + inner))
+    return lines
+
+
+def exchange_lines(lines: list[str]) -> list[str]:
+    """The Exchange lines of `plan_lines` output in plan order, stripped
+    of the ids that differ between runs."""
     return [
-        re.sub(r"#\d+L?|, \[plan_id=\d+\]|\(\d+\)", "", ln).lstrip(" :+-").rstrip()
-        for ln in plan.splitlines()
+        re.sub(r"#\d+L?|, \[plan_id=\d+\]|\(\d+\)", "", ln).rstrip()
+        for ln in lines
         if "Exchange" in ln
     ]
 
@@ -95,20 +143,23 @@ def main() -> None:
             df = qs[name].spark_fn(spark, SF_DIR)
             qe = df._jdf.queryExecution()
             text = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
-            exchanges = exchange_lines(qe)
+            plan_chars = len(qe.executedPlan().toString())
+            lines = plan_lines(qe)
             rows = len(df.toPandas())
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         job_ids = sc.statusTracker().getJobIdsForGroup(group)
         shuffle, cpu_s = stage_totals(sc, job_ids)
+        exchanges = exchange_lines(lines)
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(text)
             f.write("\n== Exchange (normalized) ==\n" + "\n".join(exchanges) + "\n")
         print(
-            f"wrote {path} ({text.count('Exchange (')} Exchange, {len(job_ids)} jobs, "
+            f"wrote {path} ({len(exchanges)} Exchange, {len(job_ids)} jobs, "
             f"{shuffle} shuffle bytes written, {cpu_s:.3f} executor CPU s, "
-            f"{text.count('Scan parquet')} parquet scans, {rows} rows)"
+            f"{sum('FileScan parquet' in ln for ln in lines)} parquet scans, "
+            f"{plan_chars} plan chars, {rows} rows)"
         )
         release_waypoints()
         spark.catalog.clearCache()

@@ -9,13 +9,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_fcfs_spark.registry import all_queries
+from scripts.dump_plan import plan_lines
 from tests.conftest import SF_ORACLE
 
 Q = all_queries()
 
 
 def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The executed plan, one node per line, each cached relation's plan
+    once (its final plan when the waypoint is built): a FileScan line
+    under a waypoint is a scan that runs once, however many consumers
+    read the cache."""
+    return "\n".join(plan_lines(df._jdf.queryExecution()))
 
 
 def _optimized(df) -> str:
@@ -204,12 +209,57 @@ def test_sequence_packing_no_global_data_window(spark):
 
 
 def test_minhash_signature_index_cached(spark):
-    """The signature table must be persisted: three consumers (banding +
-    two verify probes) would otherwise re-run the scan+shingle+64-hash
-    aggregation each."""
+    """The signature table must be persisted: its four scans (banding
+    and the verify probes) would otherwise re-run the scan+shingle+
+    64-hash aggregation each."""
     df = Q["dedup_minhash_lsh"].spark_fn(spark, SF_ORACLE)
     plan = _plan(df)
     assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
+
+
+def test_waypoint_builds_once_before_its_scans(spark):
+    """caching.waypoint builds its cache in ONE job before it returns,
+    so a query scanning it four times submits no build job of its own
+    (left lazy, each scan's TableCacheQueryStage submitted one: 4 + 2
+    jobs for the query below); waypoint() on a frame whose cache is
+    built runs no job; release_waypoints() leaves no persisted RDD."""
+    from hadoop_fcfs_spark.caching import release_waypoints, waypoint
+
+    sc = spark.sparkContext
+    group = "test_waypoint_builds_once_before_its_scans"
+
+    def jobs() -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    release_waypoints()
+    before = persisted()
+    sc.setJobGroup(group, group)
+    try:
+        src = spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 AS k")
+        w = waypoint(src)
+        assert jobs() == 1
+        four = (
+            w.filter("k = 0").union(w.filter("k = 1"))
+            .union(w.filter("k = 2")).union(w.filter("k = 3"))
+        )
+        assert _plan(four).count("InMemoryTableScan") == 4
+        built = jobs()
+        assert len(four.groupBy("k").count().collect()) == 4
+        first = jobs() - built
+        assert len(four.groupBy("k").count().collect()) == 4
+        again = jobs() - built - first
+        assert first == again, (first, again)  # the first run built nothing
+        n = jobs()
+        waypoint(spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 AS k"))
+        assert jobs() == n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert persisted() - before
+    release_waypoints()
+    assert not persisted() - before
 
 
 @pytest.mark.parametrize("gate", ["dedup_minhash_lsh", "dedup_ngram_jaccard"])
@@ -218,14 +268,14 @@ def test_shingles_follow_one_doc_key_shuffle(spark, gate):
     repartition of (id, text) on the id, no round-robin fan-out, and no
     exchange on doc or (doc, gram) above it — the gram distinct, the
     signature / gram-set aggregate and the set sizes all ride the doc
-    partitioning. Distinct normalized Exchange lines, so the cached
-    signature plan, printed under each of its consumers, counts once."""
+    partitioning. Distinct normalized Exchange lines of the executed
+    plan, the cached signature plan read once."""
     import re
 
     from scripts.dump_plan import exchange_lines
 
     df = Q[gate].spark_fn(spark, SF_ORACLE)
-    lines = set(exchange_lines(df._jdf.queryExecution()))
+    lines = set(exchange_lines(plan_lines(df._jdf.queryExecution())))
     assert not any("RoundRobinPartitioning" in ln for ln in lines), lines
     assert not any(
         re.search(r"hashpartitioning\(doc(, gram\w*)?, \d+\), ENSURE_REQUIREMENTS", ln)
@@ -236,6 +286,21 @@ def test_shingles_follow_one_doc_key_shuffle(spark, gate):
         if re.fullmatch(r"Exchange hashpartitioning\(doc, \d+\), REPARTITION_BY_NUM", ln)
     ]
     assert len(by_doc) == 1, lines
+
+
+@pytest.mark.parametrize("gate", ["dedup_ngram_jaccard", "containment_dedup"])
+def test_exact_jaccard_shingles_once_per_join_side(spark, gate):
+    """ngram_jaccard_pairs / containment_pairs carry each gram-set size
+    on its (doc, gram) row as a per-doc window (no exchange: the gram
+    table is doc-partitioned), so the two gram-join sides are the only
+    shingling passes — no sizes aggregate shingles the text again, and
+    no join is keyed on the doc columns."""
+    plan = _plan(Q[gate].spark_fn(spark, SF_ORACLE))
+    assert plan.count("Generate explode") == 2, plan
+    assert "windowspecdefinition(doc" in plan, plan
+    for ln in plan.splitlines():
+        assert not ("Join" in ln and "[doc_a" in ln), ln
+        assert not ("Join" in ln and "[doc_b" in ln), ln
 
 
 def test_forecast_revenue_full_pushdown(spark):
@@ -539,25 +604,24 @@ def test_stats_tier_aggregate_first(spark):
     events) and scans raw data once; corr does all pairwise moments in
     one scan; MI's marginals/total/terms all read the PERSISTED
     contingency table — exactly one raw scan each (the waypoint exists
-    because Catalyst re-derives common DataFrame subplans per consumer)."""
+    because Catalyst re-derives common DataFrame subplans per consumer;
+    `_plan` shows a cached plan once, so each FileScan line is a scan
+    that runs)."""
     from hadoop_fcfs_spark.caching import release_waypoints
 
     a = _plan(Q["daily_event_anomaly"].spark_fn(spark, SF_ORACLE))
     assert "Window" not in a  # stats via groupBy+join, no window at all
     # both consumers (stats agg + final join) read the persisted grain
-    # summaries; FileScan lines beyond the first are the embedded
-    # cached-plan description, not executed scans
+    # summaries
     assert a.count("InMemoryTableScan") == 2
     c = _plan(Q["lineitem_corr"].spark_fn(spark, SF_ORACLE))
     assert c.count("FileScan") == 1
     m = _plan(Q["orders_mutual_info"].spark_fn(spark, SF_ORACLE))
     # every consumer (terms join, marginals, total, cardinality row)
-    # reads the persisted contingency table: each FileScan line in the
-    # plan text is an embedded cached-plan description under an
-    # InMemoryTableScan, so the counts must MATCH (no free-standing
-    # un-cached scan of the raw table)
+    # reads the persisted contingency table: the one FileScan is the
+    # cached plan's (no free-standing un-cached scan of the raw table)
     assert m.count("InMemoryTableScan") >= 4
-    assert m.count("FileScan") == m.count("InMemoryTableScan")
+    assert m.count("FileScan") == 1
     release_waypoints()
 
 
@@ -1935,15 +1999,15 @@ def test_ann_ivf_recall_curve_broadcast_cells_no_cartesian(spark):
 def test_wordpiece_pair_scores_single_scan_broadcast_joins(spark):
     """wordpiece_pair_scores (r14): the word-TYPE table is a waypoint
     feeding all three consumers (pair census + both symbol-count join
-    sides) — documents scanned ONCE (every FileScan line is the
-    embedded cached-plan description under an InMemoryTableScan, the
-    stats-tier convention); the symbol-count joins are alphabet-
-    bounded BROADCASTS, never a shuffle join; no cartesian."""
+    sides) — documents scanned ONCE (the one FileScan is the cached
+    plan's, which `_plan` shows once for the three scans of it); the
+    symbol-count joins are alphabet-bounded BROADCASTS, never a shuffle
+    join; no cartesian."""
     from hadoop_fcfs_spark.caching import release_waypoints
 
     plan = _plan(Q["wordpiece_pair_scores"].spark_fn(spark, SF_ORACLE))
     assert plan.count("InMemoryTableScan") == 3
-    assert plan.count("FileScan") == plan.count("InMemoryTableScan")
+    assert plan.count("FileScan") == 1
     assert plan.count("BroadcastHashJoin") == 2
     for j in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
         assert j not in plan, j

@@ -3007,3 +3007,70 @@ def test_gram_rows_matches_python_shingler(spark, rows, n, in_parts, parts):
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert len(got) == len(set(got)) and set(got) == want, (rows, n)
     assert len(sig) == len(set(sig)) and set(sig) == want_sig, (rows, n)
+
+
+def _py_gram_pairs(rows, n, max_doc_freq):
+    """Pure-Python exact Jaccard and containment over `_py_shingles`'
+    posting list: shingles in more than `max_doc_freq` docs dropped
+    first (a NULL id counts toward a shingle's doc frequency), then
+    per pair of non-NULL ids sharing a shingle, the shared count over
+    the union (Jaccard, a < b) and over each side's own set
+    (containment of a in b, a != b), rounded half-up to 4 places."""
+    from collections import Counter, defaultdict
+    from decimal import ROUND_HALF_UP, Decimal
+
+    post = _py_shingles(rows, n)
+    if max_doc_freq is not None:
+        freq = Counter(g for _, g in post)
+        post = {(i, g) for i, g in post if freq[g] <= max_doc_freq}
+    sets = defaultdict(set)
+    for i, g in post:
+        if i is not None:
+            sets[i].add(g)
+
+    def r4(x):
+        return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+    jac, cont = set(), set()
+    for a in sets:
+        for b in sets:
+            common = len(sets[a] & sets[b])
+            if a == b or not common:
+                continue
+            if a < b:
+                jac.add((a, b, r4(common / len(sets[a] | sets[b]))))
+            cont.add((a, b, r4(common / len(sets[a]))))
+    return jac, cont
+
+
+@given(
+    st.lists(st.tuples(st.one_of(st.none(), st.integers(0, 5)), _shingle_text), max_size=8),
+    st.sampled_from([1, 2]),
+    st.sampled_from([None, 1, 2]),
+    st.sampled_from([2, 3, 16]),
+)
+@example([(0, "a b c"), (1, "a b"), (2, "c c")], 1, None, 3)  # contained doc, repeated token
+@example([(0, "a b"), (0, "b c"), (1, "b c"), (None, "a b")], 2, None, 2)  # dup id, NULL id
+@example([(0, "a b"), (1, "a c"), (2, "a b"), (None, "a")], 1, 2, 16)  # stop-shingle dropped
+@settings(max_examples=8, deadline=None)
+def test_gram_pairs_match_python_reference(spark, rows, n, max_doc_freq, parts):
+    """ngram_jaccard_pairs and containment_pairs == pure-Python exact
+    Jaccard and containment on NULL and duplicate ids, NULL / empty /
+    whitespace-only text, contained docs, docs sharing nothing and the
+    `max_doc_freq` stop-shingle drop, over 2/3/16 shuffle partitions."""
+    from hadoop_fcfs_spark.llm.dedup import containment_pairs, ngram_jaccard_pairs
+
+    want_jac, want_cont = _py_gram_pairs(rows, n, max_doc_freq)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        jac = ngram_jaccard_pairs(df, "doc_id", "text", n, 0.0, max_doc_freq)
+        got_jac = [tuple(r) for r in jac.collect()]
+        cont = containment_pairs(df, "doc_id", "text", n, 0.5, max_doc_freq)
+        got_cont = [tuple(r) for r in cont.collect()]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert len(got_jac) == len(set(got_jac)) and set(got_jac) == want_jac, rows
+    want_cont = {t for t in want_cont if t[2] >= 0.5}
+    assert len(got_cont) == len(set(got_cont)) and set(got_cont) == want_cont, rows
