@@ -566,11 +566,7 @@ def incremental_exact_dedup(
     (io/writers.write_sorted_bucketed bloom_cols) so the anti-join's
     scan prunes row groups before shuffling anything.
     """
-    norm = (
-        F.md5(F.lower(F.trim(F.col(text_col))).cast("binary"))
-        if normalize
-        else F.md5(F.col(text_col).cast("binary"))
-    )
+    norm = text_digest(text_col, normalize)
     ref_digests = reference.select(norm.alias("__digest")).distinct()
     fresh = batch.withColumn("__digest", norm).join(
         ref_digests, "__digest", "left_anti"
@@ -578,6 +574,36 @@ def incremental_exact_dedup(
     w_min = F.min(id_col).alias(id_col)
     winners = fresh.groupBy("__digest").agg(w_min)
     return fresh.join(winners, ["__digest", id_col], "leftsemi").drop("__digest")
+
+
+def text_digest(text_col: str, normalize: bool = True) -> Column:
+    """The exact-dedup key of a text column: the md5 hex string of the
+    text, lower-cased and space-trimmed when ``normalize``. NULL text
+    gives a NULL digest."""
+    text = F.lower(F.trim(F.col(text_col))) if normalize else F.col(text_col)
+    return F.md5(text.cast("binary"))
+
+
+def min_id_per_digest(df: DataFrame, digest_col: str, id_col: str) -> DataFrame:
+    """The rows of ``df`` whose id is the least id of their digest — the
+    in-batch step of incremental exact dedup, as a ``min(id)`` window
+    over the digest partition: one exchange on the digest and no join.
+
+    Same rows as a ``groupBy(digest).min(id)`` semi-joined back on
+    (digest, id): a NULL digest or a NULL id never matches, so those
+    rows are dropped, and rows tied on (digest, id) are all kept. The
+    window's exchange carries whole rows where the grouped form
+    shuffles map-side-combined (digest, id) partials, so it wins on
+    jobs and plan size and loses a little on shuffle bytes when a
+    batch holds many duplicates."""
+    from pyspark.sql import Window
+
+    return (
+        df.filter(F.col(digest_col).isNotNull())
+        .withColumn("__min_id", F.min(id_col).over(Window.partitionBy(digest_col)))
+        .filter(F.col(id_col) == F.col("__min_id"))
+        .drop("__min_id")
+    )
 
 
 def jaccard_prefix_pairs(

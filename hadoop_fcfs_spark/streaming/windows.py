@@ -117,6 +117,48 @@ def foreach_batch_parquet(stream_df: DataFrame, out_dir: str, checkpoint_dir: st
     )
 
 
+def _dedup_epoch(
+    batch_df: DataFrame, epoch_id: int, id_col: str, text_col: str, out_dir: str
+) -> None:
+    """One micro-batch of ``stream_incremental_dedup``."""
+    from hadoop_fcfs_spark.llm.dedup import min_id_per_digest, text_digest
+
+    spark = batch_df.sparkSession
+    digest_root = f"{out_dir}/digests"
+    # enumerate prior epochs through the Hadoop FileSystem API (as
+    # compact_files does) so non-local stores (hdfs://, s3a://) list
+    # correctly — driver-local os.listdir would silently return
+    # nothing there and skip cross-batch dedup entirely
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(digest_root)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    prior_epochs = []
+    if fs.exists(root):
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if st.isDirectory() and name.startswith("epoch=") and name != f"epoch={epoch_id}":
+                prior_epochs.append(f"{digest_root}/{name}")
+    # the store holds digests, so the cross-batch pass is a
+    # digest-to-digest anti-join — the batch twin re-hashes
+    # reference TEXT; here prior epochs already materialized theirs
+    fresh = batch_df.withColumn("__digest", text_digest(text_col))
+    if prior_epochs:
+        fresh = fresh.join(
+            spark.read.schema("digest string").parquet(*prior_epochs),
+            F.col("__digest") == F.col("digest"),
+            "left_anti",
+        )
+    data_dir = f"{out_dir}/data/epoch={epoch_id}"
+    # the min-id window leaves rows in digest order; a local sort puts
+    # them back in id order, which the file encodes more tightly
+    kept = min_id_per_digest(fresh, "__digest", id_col).drop("__digest")
+    kept.sortWithinPartitions(id_col).write.mode("overwrite").parquet(data_dir)
+    committed = spark.read.schema(batch_df.schema).parquet(data_dir)
+    committed.select(text_digest(text_col).alias("digest")).distinct().write.mode(
+        "overwrite"
+    ).parquet(f"{digest_root}/epoch={epoch_id}")
+
+
 def stream_incremental_dedup(
     stream_df: DataFrame,
     id_col: str,
@@ -126,62 +168,34 @@ def stream_incremental_dedup(
 ):
     """Streaming corpus ingestion with cross-batch exact dedup: each
     micro-batch drops rows whose normalized text digest appeared in ANY
-    previous epoch (llm.dedup.incremental_exact_dedup against the
-    accumulated digest store), then writes survivors + their digests to
-    epoch-suffixed directories.
+    previous epoch (a digest anti-join against the accumulated digest
+    store), keeps the min-id row per digest within the batch
+    (llm.dedup.min_id_per_digest; the batch twin
+    llm.dedup.incremental_exact_dedup keeps the same rows), writes the
+    survivors to ``data/epoch=N``, then derives ``digests/epoch=N`` from
+    that committed data epoch: it is read back, re-hashed and made
+    distinct, so the store holds exactly the digests of what was
+    written, and the dedup plan runs once per batch rather than once
+    per output (5 Spark jobs per batch once prior epochs exist). At
+    this scale each epoch is one file under ``data/`` and one under
+    ``digests/`` (AQE coalesces both writes' shuffles); nothing is
+    cached.
 
     Epoch-overwrite keeps the DATA dirs idempotent under replay. The
     digest-store read races only with this writer (streaming epochs are
     serial), so the accumulated reference is always the union of
     committed epochs; a REPLAYED epoch rewrites its own digest dir
     rather than appending, preserving exactly-once digest accounting.
-    At corpus scale the digest store is 16 bytes/doc parquet — bloom it
+    Both read-backs (prior digests, the committed data epoch) carry a
+    declared schema, so no batch runs a schema-inference job. At corpus
+    scale the digest store grows with every epoch — bloom it
     (write_sorted_bucketed bloom_cols) and compact it periodically
     (ops.layout.compact_files) as it grows.
     """
-    from pyspark.sql import functions as F
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        digest_root = f"{out_dir}/digests"
-        # enumerate prior epochs through the Hadoop FileSystem API (as
-        # compact_files does) so non-local stores (hdfs://, s3a://) list
-        # correctly — driver-local os.listdir would silently return
-        # nothing there and skip cross-batch dedup entirely
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(digest_root)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        prior_epochs = []
-        if fs.exists(root):
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if st.isDirectory() and name.startswith("epoch=") and name != f"epoch={epoch_id}":
-                    prior_epochs.append(f"{digest_root}/{name}")
-        # the store holds digests (16 bytes/doc), so the cross-batch pass
-        # is a digest-to-digest anti-join — the batch twin
-        # (llm.dedup.incremental_exact_dedup) re-hashes reference TEXT;
-        # here prior epochs already materialized their digests
-        fresh = batch_df.withColumn(
-            "__digest", F.md5(F.lower(F.trim(F.col(text_col))).cast("binary"))
-        )
-        if prior_epochs:
-            fresh = fresh.join(
-                spark.read.parquet(*prior_epochs).select("digest"),
-                F.col("__digest") == F.col("digest"),
-                "left_anti",
-            )
-        # in-batch dedup: min-id representative per digest
-        winners = fresh.groupBy("__digest").agg(F.min(id_col).alias(id_col))
-        kept = fresh.join(winners, ["__digest", id_col], "leftsemi")
-        kept.drop("__digest").write.mode("overwrite").parquet(
-            f"{out_dir}/data/epoch={epoch_id}"
-        )
-        kept.select(F.col("__digest").alias("digest")).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/digests/epoch={epoch_id}")
-
     return (
-        stream_df.writeStream.foreachBatch(process)
+        stream_df.writeStream.foreachBatch(
+            lambda batch_df, epoch_id: _dedup_epoch(batch_df, epoch_id, id_col, text_col, out_dir)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
@@ -345,10 +359,11 @@ def stream_upsert_sink(
             # replay of the committed epoch: rebuild from the one before
             prior = int(prev.split("=")[1]) - 1
             prev = f"epoch={prior}" if prior >= 0 else None
+        schema = batch_df.drop(op_col).schema
         if prev is None:
-            snapshot = spark.createDataFrame([], batch_df.drop(op_col).schema)
+            snapshot = spark.createDataFrame([], schema)
         else:
-            snapshot = spark.read.parquet(f"{out_dir}/{prev}")
+            snapshot = spark.read.schema(schema).parquet(f"{out_dir}/{prev}")
         merged = apply_changeset(
             snapshot, batch_df, key, op_col=op_col, ts_col=ts_col, tiebreak=tiebreak
         )
@@ -454,7 +469,7 @@ def stream_maintained_agg(
             cnt_col=cnt_col,
         )
         base = (
-            spark.read.parquet(f"{state_dir}/{prev}")
+            spark.read.schema(delta.schema).parquet(f"{state_dir}/{prev}")
             if prev is not None
             else delta.limit(0)  # empty state, same schema/merge path
         )
@@ -505,7 +520,7 @@ def stream_maintained_sketch(
             ).alias("kll_sketch")
         )
         base = (
-            spark.read.parquet(f"{state_dir}/{prev}")
+            spark.read.schema(delta.schema).parquet(f"{state_dir}/{prev}")
             if prev is not None
             else delta.limit(0)
         )

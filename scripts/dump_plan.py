@@ -43,6 +43,7 @@ import os
 import re
 import sys
 
+from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -55,11 +56,15 @@ from hadoop_fcfs_spark.tables import register_views  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def stage_totals(sc, job_ids) -> tuple[int, float]:
+def stage_totals(sc, job_ids) -> tuple[int, float, int]:
     """Shuffle bytes written and executor CPU seconds of the stages of
     `job_ids` that ran, read from the application status store once its
-    listener has caught up. A stage listed by several jobs counts once,
-    a skipped stage not at all."""
+    listener has caught up, and the number of those stages the store no
+    longer holds. A stage listed by several jobs counts once, a skipped
+    stage not at all. The store keeps the last `spark.ui.retainedStages`
+    stages (1000), so after about 50 queries in one session a job can
+    list a stage it has dropped: that stage is left out of the totals
+    and counted as missing."""
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
@@ -67,11 +72,22 @@ def stage_totals(sc, job_ids) -> tuple[int, float]:
     for job in job_ids:
         ids = store.job(job).stageIds()
         stages.update(ids.apply(i) for i in range(ids.size()))
-    ran = [st for st in (store.lastStageAttempt(s) for s in stages)
-           if st.status().toString() == "COMPLETE"]
+    attempts = [_stored(lambda: store.lastStageAttempt(s)) for s in stages]
+    ran = [st for st in attempts if st is not None and st.status().toString() == "COMPLETE"]
     shuffle = sum(st.shuffleWriteBytes() for st in ran)
     cpu_ns = sum(st.executorCpuTime() for st in ran)
-    return shuffle, cpu_ns / 1e9
+    return shuffle, cpu_ns / 1e9, attempts.count(None)
+
+
+def _stored(lookup):
+    """`lookup()`, or None when the status store no longer has the
+    entry (it raises `java.util.NoSuchElementException`)."""
+    try:
+        return lookup()
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+            raise
+        return None
 
 
 def _seq(xs) -> list:
@@ -149,7 +165,7 @@ def main() -> None:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         job_ids = sc.statusTracker().getJobIdsForGroup(group)
-        shuffle, cpu_s = stage_totals(sc, job_ids)
+        shuffle, cpu_s, missing = stage_totals(sc, job_ids)
         exchanges = exchange_lines(lines)
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
@@ -157,7 +173,8 @@ def main() -> None:
             f.write("\n== Exchange (normalized) ==\n" + "\n".join(exchanges) + "\n")
         print(
             f"wrote {path} ({len(exchanges)} Exchange, {len(job_ids)} jobs, "
-            f"{shuffle} shuffle bytes written, {cpu_s:.3f} executor CPU s, "
+            f"{shuffle} shuffle bytes written, {cpu_s:.3f} executor CPU s "
+            f"({missing} stages no longer in the status store), "
             f"{sum('FileScan parquet' in ln for ln in lines)} parquet scans, "
             f"{plan_chars} plan chars, {rows} rows)"
         )

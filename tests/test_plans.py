@@ -2126,3 +2126,22 @@ def test_corpus_pipeline_v8_single_scan_no_cartesian(spark):
     for bad in ("CartesianProduct", "SortMergeJoin", "ShuffledHashJoin",
                 "BatchEvalPython"):
         assert bad not in plan, bad
+
+
+def test_stage_totals_skips_stages_the_status_store_dropped(spark):
+    """`scripts/dump_plan.py::stage_totals` reads stages from the status
+    store, which keeps only the last `spark.ui.retainedStages`: a stage
+    it no longer has is counted as missing, not raised."""
+    from scripts.dump_plan import _stored, stage_totals
+
+    sc = spark.sparkContext
+    group = "test_stage_totals"
+    sc.setJobGroup(group, group)
+    try:
+        spark.range(0, 100, 1, 4).groupBy((F.col("id") % 3).alias("k")).count().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    shuffle, cpu_s, missing = stage_totals(sc, sc.statusTracker().getJobIdsForGroup(group))
+    assert shuffle > 0 and cpu_s >= 0 and missing == 0
+    store = sc._jsc.sc().statusStore()
+    assert _stored(lambda: store.lastStageAttempt(2**31 - 1)) is None

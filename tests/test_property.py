@@ -3074,3 +3074,92 @@ def test_gram_pairs_match_python_reference(spark, rows, n, max_doc_freq, parts):
     assert len(got_jac) == len(set(got_jac)) and set(got_jac) == want_jac, rows
     want_cont = {t for t in want_cont if t[2] >= 0.5}
     assert len(got_cont) == len(set(got_cont)) and set(got_cont) == want_cont, rows
+
+
+# ---------------------------------------------------------------------------
+# incremental exact dedup: the min-id step and one stream batch
+# ---------------------------------------------------------------------------
+
+# case and space variants of one text, another text and NULL text; the
+# stream's digest is md5(lower(trim(text))) with trim = spaces only
+_DEDUP_TEXTS = st.sampled_from(["a b", "A B", "  a b ", "a  b", "c", " C", None])
+_DEDUP_IDS = st.one_of(st.none(), st.integers(0, 4))
+
+
+def _py_digest(text):
+    import hashlib
+
+    if text is None:
+        return None
+    return hashlib.md5(text.strip(" ").lower().encode("utf-8")).hexdigest()
+
+
+def _py_min_id_rows(rows, digest_of):
+    """Pure-Python min-id-per-digest: a row is kept when its digest and
+    id are not NULL and its id is the least id of its digest."""
+    least: dict = {}
+    for r in rows:
+        d = digest_of(r)
+        if d is not None and r[0] is not None:
+            least[d] = min(least.get(d, r[0]), r[0])
+    return [r for r in rows if digest_of(r) is not None and r[0] is not None
+            and r[0] == least[digest_of(r)]]
+
+
+def _bag(rows):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in rows)
+
+
+@given(st.lists(st.tuples(_DEDUP_IDS, st.sampled_from(["d1", "d2", None]), st.integers(0, 2)),
+                max_size=10))
+@example([])  # empty batch
+@example([(1, "d1", 0), (1, "d1", 1), (2, "d1", 2)])  # tied (digest, id) rows both kept
+@example([(None, "d1", 0), (3, "d1", 1), (None, "d2", 2)])  # NULL ids
+@example([(0, None, 0), (1, None, 1)])  # NULL digests dropped
+@settings(max_examples=12, deadline=None)
+def test_min_id_per_digest_matches_python_reference(spark, rows):
+    """``llm.dedup.min_id_per_digest`` keeps exactly the rows a
+    ``groupBy(digest).min(id)`` semi-joined back on (digest, id) keeps,
+    here as a pure-Python reference."""
+    from hadoop_fcfs_spark.llm.dedup import min_id_per_digest
+
+    df = spark.createDataFrame(rows, "id long, digest string, payload long")
+    got = min_id_per_digest(df, "digest", "id").select("id", "digest", "payload").collect()
+    assert _bag(got) == _bag(_py_min_id_rows(rows, lambda r: r[1]))
+
+
+@given(
+    st.lists(st.tuples(_DEDUP_IDS, _DEDUP_TEXTS), max_size=6),
+    st.lists(st.tuples(_DEDUP_IDS, _DEDUP_TEXTS), max_size=8),
+)
+@example([], [])  # empty batches
+@example([(0, "a b")], [(1, "  A B "), (2, "c"), (2, "c"), (3, " C")])  # prior digest, ties
+@example([(None, "c")], [(None, None), (4, None), (1, "a  b"), (0, "a b")])  # NULL id / text
+@settings(max_examples=8, deadline=None)
+def test_stream_dedup_epoch_matches_python_reference(spark, prior, batch):
+    """One ``stream_incremental_dedup`` micro-batch step on a static
+    batch, after a prior epoch: its data epoch holds the batch's rows
+    whose digest is in no prior epoch and whose id is the least of their
+    digest (NULL text and NULL ids dropped, tied rows kept), and its
+    digest epoch the distinct digests of those rows."""
+    import shutil
+    import tempfile
+
+    from hadoop_fcfs_spark.streaming.windows import _dedup_epoch
+
+    schema = "doc_id long, text string"
+    out = tempfile.mkdtemp(prefix="dedup_epoch_")
+    try:
+        _dedup_epoch(spark.createDataFrame(prior, schema), 0, "doc_id", "text", out)
+        _dedup_epoch(spark.createDataFrame(batch, schema), 1, "doc_id", "text", out)
+        data = spark.read.schema(schema).parquet(f"{out}/data/epoch=1").collect()
+        digests = spark.read.schema("digest string").parquet(f"{out}/digests/epoch=1").collect()
+    finally:
+        shutil.rmtree(out)
+    stored = {_py_digest(r[1]) for r in _py_min_id_rows(prior, lambda r: _py_digest(r[1]))}
+    fresh = [r for r in batch if _py_digest(r[1]) not in stored]
+    want = _py_min_id_rows(fresh, lambda r: _py_digest(r[1]))
+    assert _bag(data) == _bag(want)
+    assert sorted(r[0] for r in digests) == sorted({_py_digest(r[1]) for r in want})

@@ -383,6 +383,134 @@ def test_stream_incremental_dedup_across_batches(spark, tmp_path):
     assert digests.distinct().count() == 3
 
 
+def test_stream_incremental_dedup_runs_each_batch_once(spark, tmp_path):
+    """A micro-batch plans its dedup once, not once per output: with
+    prior epochs present it runs at most 5 Spark jobs (counted from the
+    status store around processAllAvailable; planning `kept` once per
+    write, a semi-join min-id pass and an inferred prior-digest read
+    took 10). Each epoch writes one part file under data/ and one under
+    digests/, and nothing is left cached."""
+    import glob
+
+    import pandas as pd
+
+    from hadoop_fcfs_spark.streaming.windows import stream_incremental_dedup
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    cached = persisted()
+    src = tmp_path / "arrivals"
+    src.mkdir()
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
+    q = stream_incremental_dedup(stream, "doc_id", "text", out, ckpt)
+    jobs = []
+    try:
+        for b in range(3):
+            bus.waitUntilEmpty()
+            before = set(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+            texts = [f"doc {b} {i % 5}" for i in range(8)] + ["  SHARED TEXT ", "shared text"]
+            pd.DataFrame({"doc_id": range(10 * b, 10 * b + 10), "text": texts}).to_parquet(
+                src / f"b{b}.parquet"
+            )
+            q.processAllAvailable()
+            bus.waitUntilEmpty()
+            jobs.append(len(set(sc.statusTracker().getJobIdsForGroup(str(q.runId))) - before))
+    finally:
+        q.stop()
+
+    assert all(0 < n <= 5 for n in jobs[1:]), jobs
+    for sub in ("data", "digests"):
+        epochs = sorted(glob.glob(f"{out}/{sub}/epoch=*"))
+        assert len(epochs) == 3, epochs
+        assert all(len(glob.glob(f"{e}/part-*")) == 1 for e in epochs), sub
+    assert persisted() == cached
+    kept = spark.read.parquet(f"{out}/data")
+    assert kept.count() == 5 + 5 + 5 + 1  # 5 texts per batch, "shared text" once
+    assert spark.read.parquet(f"{out}/digests").count() == 16
+
+
+def test_state_sinks_keep_their_declared_schema(spark, tmp_path):
+    """The state sinks read the previous snapshot with the schema they
+    already have (no inference job): the changeset without its op column
+    for stream_upsert_sink, the batch delta's for stream_maintained_agg
+    and stream_maintained_sketch. That is only sound while every epoch
+    they write has that schema, so each snapshot's schema as written
+    (inferred from its files) must equal the declared one, field for
+    field, over several epochs."""
+    import glob
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from hadoop_fcfs_spark.ops.cdc import weighted_partial_agg
+    from hadoop_fcfs_spark.streaming.windows import (
+        stream_maintained_agg,
+        stream_maintained_sketch,
+        stream_upsert_sink,
+    )
+
+    def fields(schema) -> list:
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    cdc_schema = "k long, op string, name string, amount double, ts long"
+    agg_schema = "k string, v long, d double, w long"
+    sk_schema = "k string, v double"
+    static = {
+        s: spark.createDataFrame([], s) for s in (cdc_schema, agg_schema, sk_schema)
+    }
+    sinks = {
+        "upsert": (
+            cdc_schema,
+            lambda st, d, c: stream_upsert_sink(st, "k", d, c, ts_col="ts"),
+            static[cdc_schema].drop("op").schema,
+            lambda b: pd.DataFrame(
+                {"k": [b, b + 1], "op": ["U", "U"], "name": ["x", None],
+                 "amount": [1.5, None], "ts": [b, b]}
+            ),
+        ),
+        "agg": (
+            agg_schema,
+            lambda st, d, c: stream_maintained_agg(
+                st, ["k"], [("v", "sv"), ("d", "sd")], "w", d, c
+            ),
+            weighted_partial_agg(
+                static[agg_schema], ["k"], [(F.col("v"), "sv"), (F.col("d"), "sd")], F.col("w")
+            ).schema,
+            lambda b: pd.DataFrame(
+                {"k": ["a", "b"], "v": [b, 1], "d": [0.5, 1.5], "w": [1, 1]}
+            ),
+        ),
+        "sketch": (
+            sk_schema,
+            lambda st, d, c: stream_maintained_sketch(st, ["k"], "v", d, c),
+            static[sk_schema].groupBy("k").agg(
+                F.kll_sketch_agg_double(F.col("v"), F.lit(200)).alias("kll_sketch")
+            ).schema,
+            lambda b: pd.DataFrame({"k": ["a", "b"], "v": [float(b), 2.0]}),
+        ),
+    }
+    for name, (schema, start, declared, batch) in sinks.items():
+        src = tmp_path / name / "src"
+        src.mkdir(parents=True)
+        out, ckpt = str(tmp_path / name / "out"), str(tmp_path / name / "ckpt")
+        q = start(spark.readStream.schema(schema).parquet(str(src)), out, ckpt)
+        try:
+            for b in range(3):
+                batch(b).to_parquet(src / f"b{b}.parquet")
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        epochs = glob.glob(f"{out}/epoch=*")
+        assert epochs, name
+        for e in epochs:
+            assert fields(spark.read.parquet(e).schema) == fields(declared), (name, e)
+
+
 def test_stream_drift_monitor_alarms_on_shift(spark, tmp_path):
     """Batch matching the reference distribution stays quiet; a
     vocabulary-swapped batch trips the alarm."""
