@@ -309,34 +309,48 @@ def chunked_running_sum(
     strategy is left to AQE (which broadcasts when the built side is
     small) rather than forced with a broadcast hint that could exceed
     executor memory.
+
+    Every row is kept, NULL keys included. The group columns and the
+    chunk travel as ONE struct key, never NULL itself and equal field by
+    field with NULL == NULL, so the offsets join back as a plain
+    equi-join on the column the level-1 window is partitioned by (no
+    extra exchange on the data side), and the group values ride the
+    data shuffle once, inside the key. A NULL chunk orders first, as a
+    NULL order value does. Callers that must leave NULL groups out
+    filter them first. Output: the input columns, group columns first,
+    plus ``out_col``.
     """
     from pyspark.sql import Window
 
-    chunked = df.withColumn("__chunk", chunk_col)
+    key = "__gk" if group_cols else "__chunk"
+    rest = [c for c in df.columns if c not in group_cols]
+    keyed = df.select(
+        *rest, F.struct(*group_cols, chunk_col.alias("__chunk")).alias(key)
+    )
     w_local = (
-        Window.partitionBy(*group_cols, "__chunk")
+        Window.partitionBy(key)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    local = chunked.withColumn("__local", F.sum(value_col).over(w_local))
-    # Totals aggregate over `local`, not `chunked`: same rows and the
-    # same (group, chunk) grain, but `local` is already exchanged and
-    # sorted by the window, so the aggregation rides that partitioning
-    # — deriving totals from `chunked` re-evaluated the whole upstream
-    # subtree a second time (one extra corpus-sized pass at scale).
-    totals = local.groupBy(*group_cols, "__chunk").agg(
-        F.sum(value_col).alias("__tot")
-    )
+    local = keyed.withColumn("__local", F.sum(value_col).over(w_local))
+    # Totals: a map-side-combined rollup of the same rows per key. The
+    # optimizer prunes the unused window from this branch, so it reads
+    # the input again and exchanges its own partial sums (the data-side
+    # exchange above is not reused).
+    totals = local.groupBy(key).agg(F.sum(value_col).alias("__tot"))
     w_off = (
         Window.partitionBy(*group_cols)
-        .orderBy("__chunk")
+        .orderBy("__cv")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__tot").over(w_off), F.lit(0))
-    ).select(*group_cols, "__chunk", "__off")
-    return (
-        local.join(offsets, [*group_cols, "__chunk"])
-        .withColumn(out_col, F.col("__local") + F.col("__off"))
-        .drop("__chunk", "__local", "__off")
+    offsets = totals.select(
+        key,
+        "__tot",
+        *[F.col(key)[c].alias(c) for c in group_cols],
+        F.col(key)["__chunk"].alias("__cv"),
+    ).select(key, F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off"))
+    return local.join(offsets, key).select(
+        *[F.col(key)[c].alias(c) for c in group_cols],
+        *rest,
+        (F.col("__local") + F.col("__off")).alias(out_col),
     )

@@ -1695,116 +1695,130 @@ def ks_group_drift(
     — the "which source drifted" report (ks_two_sample answers one
     pairwise question; monitors want the whole fleet scored per run).
 
-    Exactness subtlety: the sup gap can occur at a value the group
-    never takes (its ECDF flat, the global one rising), so evaluating
-    only at the group's own points UNDERSTATES D. The dense evaluation
-    grid is the full (group × global-value-grain) cross — |grain|·G
-    rows, G = #groups (small by contract: sources, cohorts); group
-    cumulatives run over that dense table via
-    ops.sort.chunked_running_sum (value-bucket chunks, no per-group
-    window task), the global cumulative as the per-value SUM of the
-    group cumulatives (a G-row-bounded window on the same dense table
-    — the dense grid makes Σ_g cum(g,v) the exact global running
-    count, so no separate global prefix-sum pass is needed). Per-row
-    gap = one division per side over exact
-    BIGINTs; max() order-independent. Output: one row per group
-    (group, n_g, n_total, d_e6), d vs the global distribution including the group
-    itself (self-inclusive convention, documented), sorted by group
-    with the NULL group first.
+    Exactness: the sup gap can occur at a value the group never takes
+    (its ECDF flat, the global one rising), so the gap at the group's
+    own points alone UNDERSTATES D. The two-sided endpoint rule is
+    exact: between two consecutive values of group g, g's ECDF is
+    flat and the pooled ECDF only rises, so the signed gap only falls
+    there and its absolute value peaks at an end of the flat stretch —
+    at one of g's own values v (group cumulative cum_g(v), pooled
+    gcum(v)) or just before v (cum_g(v) − c(g, v) and gcum(v) − cc(v),
+    cc the pooled count at v). Before g's first value the group side
+    is 0; after its last value the group ECDF is 1 and the gap only
+    shrinks, so it peaks at that last value. Every "just before v"
+    point has the integer operands of the last pooled value below v
+    (or is 0), so evaluating both points per (g, v) row with the one
+    formula |a/n_g − b/n_total| over exact BIGINTs reproduces the max
+    of the dense (group × pooled value) grid bit for bit: correctly
+    rounded division and subtraction are monotone, so no grid point
+    between the two evaluated ones can exceed them in doubles either.
 
-    The G-row tables ride ONE partition (SCALING.md, "Group-grain
-    tables ride one partition"): the group table is coalesced after
-    its aggregate, so the corpus total n_total is a whole-frame window
-    over G rows in place of a separate SinglePartition aggregate and
-    its broadcast; the G-row output is coalesced the same way and
-    sorted within that one partition in place of a global ORDER BY
-    (a RangePartitioner sampling job plus a range shuffle for G
-    rows)."""
+    Scale shape: the (g, v) counts, partially aggregated, move ONCE
+    to their value chunk (truncation-monotone shiftright of the value
+    cast to long) and are held as one waypoint; inside each chunk
+    partition three windows take the per-(g, chunk) prefix, the pooled
+    prefix (a RANGE frame on the value, so ties across groups count)
+    and the pooled count at the value, with no exchange. The
+    (g, chunk) summary — G × chunks rows — carries each group's
+    exclusive chunk offset (one small hash exchange on g), then rides
+    ONE partition (SCALING.md, "Group-grain tables ride one
+    partition") for n_g, n_total and the pooled exclusive chunk
+    offset, and is broadcast back on (g null-safe, chunk). The G-row
+    output is coalesced the same way and sorted within that one
+    partition in place of a global ORDER BY. Output: one row per group
+    (group, n_g, n_total, d_e6), d vs the global distribution
+    including the group itself (self-inclusive convention), sorted by
+    group with the NULL group first; NULL values are dropped."""
     from pyspark.sql import Window
 
     from hadoop_fcfs_spark.caching import waypoint
-    from hadoop_fcfs_spark.ops.sort import chunked_running_sum
 
-    gg = waypoint(
+    # The waypoint lets the summary branch and the probe branch read
+    # one chunk exchange: without it each branch prunes its own
+    # columns, AQE reuses neither exchange, and the upstream runs twice.
+    cells = waypoint(
         df.filter(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("__g"), F.col(value_col).alias("__v"))
-        .groupBy("__g", "__v")
+        .groupBy(F.col(group_col).alias("__g"), F.col(value_col).alias("__v"))
         .agg(F.count("*").cast("long").alias("__c"))
+        .withColumn("__k", F.shiftright(F.col("__v").cast("long"), 8))
+        .repartition("__k")
     )
-    # Σ_g n_g over the groups (NULL group included) == the non-NULL
-    # value count. __gi is a non-NULL stand-in for the group key: the
-    # chunked cumulative joins its offsets back on the group key, and a
-    # NULL key would never match there.
-    groups = (
-        gg.groupBy("__g")
-        .agg(F.sum("__c").alias("__ng"))
-        .coalesce(1)
-        .withColumn("__nn", F.sum("__ng").over(Window.partitionBy()))
-        .withColumn("__gi", F.row_number().over(Window.orderBy("__g")))
-    )
-    # Value-grain stats carry each value's per-group counts IN-ROW (a
-    # ≤ G-entry map, plus the NULL group's count beside it, as a map
-    # key cannot be NULL), so the dense grid is a broadcast-attach of
-    # the G-row group table + one lookup per (value, group) cell — the
-    # former gv⨯groups LEFT JOIN gg on (g, v) and its two hash exchanges
-    # (plus the join stage) are gone; same exact integer counts (a
-    # missing entry IS the left join's unmatched NULL, coalesced to 0).
-    gv = waypoint(
-        gg.groupBy("__v").agg(
-            F.map_from_entries(
-                F.filter(
-                    F.collect_list(F.struct(F.col("__g"), F.col("__c"))),
-                    lambda e: e["__g"].isNotNull(),
-                )
-            ).alias("__m"),
-            F.sum(F.when(F.col("__g").isNull(), F.col("__c"))).alias("__cn"),
+    before = (Window.unboundedPreceding, -1)
+    # every window below is keyed by the chunk, so it rides the chunk
+    # partitioning (a value's rows, all groups, sit in one chunk)
+    local = cells.select(
+        "__g",
+        "__k",
+        "__c",
+        F.sum("__c")
+        .over(
+            Window.partitionBy("__g", "__k")
+            .orderBy("__v")
+            .rowsBetween(Window.unboundedPreceding, 0)
         )
+        .alias("__lp"),
+        F.sum("__c")
+        .over(
+            Window.partitionBy("__k")
+            .orderBy("__v")
+            .rangeBetween(Window.unboundedPreceding, 0)
+        )
+        .alias("__pp"),
+        F.sum("__c").over(Window.partitionBy("__k", "__v")).alias("__cc"),
     )
-    dense = (
-        gv.crossJoin(F.broadcast(groups))
+    summary = (
+        local.groupBy("__g", "__k")
+        .agg(F.max("__lp").alias("__t"))
         .withColumn(
-            "__c",
-            F.coalesce(
-                F.when(F.col("__g").isNull(), F.col("__cn")).otherwise(
-                    F.try_element_at(F.col("__m"), F.col("__g"))
-                ),
-                F.lit(0),
+            "__goff",
+            F.sum("__t").over(
+                Window.partitionBy("__g").orderBy("__k").rowsBetween(*before)
             ),
         )
-        .drop("__m", "__cn")
+        .coalesce(1)
+        .select(
+            F.col("__g").alias("__sg"),
+            F.col("__k").alias("__sk"),
+            F.coalesce(F.col("__goff"), F.lit(0)).alias("__goff"),
+            F.sum("__t").over(Window.partitionBy("__g")).alias("__ng"),
+            # Σ over every (group, chunk), NULL group included == the
+            # non-NULL value count
+            F.sum("__t").over(Window.partitionBy()).alias("__nn"),
+            F.coalesce(
+                F.sum("__t").over(Window.orderBy("__k").rangeBetween(*before)),
+                F.lit(0),
+            ).alias("__poff"),
+        )
     )
-    # chunk = truncation-monotone value bucket (cast-to-long truncation
-    # and arithmetic shiftright are both non-decreasing in __v), so the
-    # per-(group, chunk) windows stay bounded even for a corpus-sized
-    # group — never a whole-group window task
-    dcum = chunked_running_sum(
-        dense,
-        ["__gi"],
-        F.shiftright(F.col("__v").cast("long"), 8),
-        ["__v"],
-        "__c",
-        out_col="__cum",
+    cum = local.join(
+        F.broadcast(summary),
+        F.col("__g").eqNullSafe(F.col("__sg")) & (F.col("__k") == F.col("__sk")),
     )
-    # Global cumulative derived from the SAME dense per-group cumulative
-    # — exact integer identity Σ_g cum(g, v) = Σ_{v'<=v} Σ_g c(g, v') =
-    # global running count at v, because the dense grid carries EVERY
-    # group at every value. One value-partitioned window (G rows per
-    # value — group-count-bounded by contract, never data-grain) replaces
-    # the previous separate global_running_sum chain (range shuffle +
-    # enumerate-persist + offsets window + join back by value): r16
-    # exchange-count reduction, identical BIGINT cumulatives.
-    gcm = F.sum("__cum").over(Window.partitionBy("__v"))
-    gap = F.abs(
-        F.col("__cum").cast("double") / F.col("__ng").cast("double")
-        - F.col("__gcm").cast("double") / F.col("__nn").cast("double")
-    )
+    at_g = F.col("__goff") + F.col("__lp")
+    at_p = F.col("__poff") + F.col("__pp")
+
+    def gap(a, b):
+        return F.abs(
+            a.cast("double") / F.col("__ng").cast("double")
+            - b.cast("double") / F.col("__nn").cast("double")
+        )
+
     return (
-        dcum.withColumn("__gcm", gcm)
-        .groupBy(F.col("__g").alias(group_col))
+        cum.groupBy(F.col("__g").alias(group_col))
         .agg(
             F.max("__ng").cast("long").alias("n_g"),
             F.max("__nn").cast("long").alias("n_total"),
-            F.floor(F.max(gap) * 1_000_000).cast("long").alias("d_e6"),
+            F.floor(
+                F.max(
+                    F.greatest(
+                        gap(at_g, at_p),
+                        gap(at_g - F.col("__c"), at_p - F.col("__cc")),
+                    )
+                )
+                * 1_000_000
+            )
+            .cast("long")
+            .alias("d_e6"),
         )
         .coalesce(1)
         .sortWithinPartitions(group_col)

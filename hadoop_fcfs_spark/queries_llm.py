@@ -3574,14 +3574,14 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(ops.stats.ks_group_drift on documents.n_chars by source): every "
     "source's KS D against the global ECDF in ONE pass - the "
     "which-source-drifted fleet report beside corpus_drift's "
-    "token-divergence. The gap is evaluated on the DENSE "
-    "(source x global-value-grain) grid - a group's ECDF is flat "
-    "where it has no mass and the sup can land exactly there; "
-    "group-own-points-only evaluation understates D. Dense per-group "
-    "cumulatives via chunked_running_sum; the global cumulative is "
-    "the per-value sum of those dense group cumulatives (no separate "
-    "prefix-sum pass); exact BIGINT counters, one division per side, "
-    "order-independent max. The G-row group table and output ride one "
+    "token-divergence. A source's ECDF is flat where it has no mass "
+    "and the sup can land there, so the gap is taken at each of the "
+    "source's own values AND just before it (the two-sided endpoint "
+    "rule, equal to the dense (source x global-value) grid bit for "
+    "bit); per-source and pooled prefixes are windows inside one "
+    "value-chunk exchange, with per-chunk offsets from a broadcast "
+    "(source, chunk) summary; exact BIGINT counters, one division per "
+    "side, order-independent max. The summary and output ride one "
     "partition (no range sort, no SinglePartition total).",
 )
 def ks_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5232,8 +5232,9 @@ def embedding_pc_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "temperature mix, SHARED _v5_stages / _V5_PIPE_CTES fragments) "
     "-> v6's md5-shuffled 4-shard assignment -> per-shard "
     "Kolmogorov-Smirnov D of the token-length distribution vs the "
-    "pooled export (ops.stats.ks_group_drift, dense evaluation grid, "
-    "chunked cumulatives). shard_assignment promises every shard is "
+    "pooled export (ops.stats.ks_group_drift, the gap at each shard's "
+    "own values and just before them, on one value-chunk exchange). "
+    "shard_assignment promises every shard is "
     "an i.i.d. sample of the corpus; v7 MEASURES that promise before "
     "anything ships - a skewed shard hash or a locality leak reads "
     "as one shard's D spiking. Composition adds only the drift "

@@ -2510,9 +2510,10 @@ def test_ks_group_drift_dense_grid_matters(spark):
 
     # group a = {1, 10}; group b = {2,...,9} (8 values). a's ECDF is
     # flat at 0.5 across (1, 10); the global ECDF climbs there, so a's
-    # sup gap lands at v=9 (global 9/10, a still 1/2): D_a = 0.4 -- a
-    # group-own-points evaluation would see only v=1 (|.5-.1|=.4 too)
-    # and v=10 (0); the dense grid catches the interior max robustly.
+    # sup gap lands at v=9 (global 9/10, a still 1/2): D_a = 0.4. At
+    # a's own values alone the gap is .4 at v=1 and 0 at v=10; the
+    # two-sided endpoint rule also evaluates just before v=10 (a's
+    # cumulative 1, the pooled one 9), which is the interior max at v=9.
     rows = [("a", 1.0), ("a", 10.0)] + [("b", float(v)) for v in range(2, 10)]
     df = spark.createDataFrame(rows, "g string, v double")
     out = {r["g"]: r for r in ks_group_drift(df, "v", "g").collect()}

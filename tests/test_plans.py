@@ -665,14 +665,15 @@ def test_no_unallowed_unpartitioned_windows_static_sweep():
         # r12: one lag over the calendar-bounded day grain (same
         # kaplan_meier rationale as the rest of the SPC tier)
         ("ops/stats.py", "runs_test"),
-        # non-NULL group id over the coalesced G-row group table
+        # pooled exclusive chunk offsets over the coalesced
+        # (group, value-chunk) summary: at most G x chunks rows
         ("ops/stats.py", "ks_group_drift"),
     }
     # Empty `Window.partitionBy()` whole-frame windows, each over a
     # summary table bounded by a small dimension
     ALLOWED_WHOLE_FRAME = {
         ("ops/sampling.py", "temperature_mix"),  # totals over the coalesced #groups-row count table
-        ("ops/stats.py", "ks_group_drift"),      # corpus total over the coalesced G-row group table
+        ("ops/stats.py", "ks_group_drift"),      # corpus total over the coalesced (group, chunk) summary
         ("llm/dsir.py", "dsir_log_weights"),     # totals over the <= num_buckets-row bucket stats
     }
     root = pathlib.Path("hadoop_fcfs_spark")
@@ -887,6 +888,47 @@ def test_group_grain_tables_ride_one_partition(spark):
     tm = _plan(temperature_mix(docs, "lang", "doc_id", 1, 2))
     assert not _distinct_exchange_ids(tm, "SinglePartition"), tm
     release_waypoints()
+
+
+def test_ks_group_drift_one_value_chunk_exchange(spark):
+    """ks_group_drift (two-sided endpoint rule): the partially aggregated
+    (group, value) counts move ONCE, hash-repartitioned on their value
+    chunk `__k`; the per-group, pooled and per-value prefixes are windows
+    inside each chunk partition, and the (group, chunk) summary comes
+    back as a broadcast equi-join — no dense (group × value) grid built
+    by a cartesian or nested-loop join, no range sort and no
+    SinglePartition exchange. A warm ks_source_drift runs 7 Spark jobs
+    at this scale (15 with the dense grid)."""
+    import re
+
+    from hadoop_fcfs_spark.caching import release_waypoints
+    from scripts.dump_plan import exchange_lines
+
+    sc = spark.sparkContext
+    group = "test_ks_group_drift_one_value_chunk_exchange"
+    Q["ks_source_drift"].spark_fn(spark, SF_ORACLE).toPandas()  # warm-up
+    release_waypoints()
+    sc.setJobGroup(group, group)
+    try:
+        df = Q["ks_source_drift"].spark_fn(spark, SF_ORACLE)
+        lines = plan_lines(df._jdf.queryExecution())
+        df.toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    release_waypoints()
+    exchanges = exchange_lines(lines)
+    by_chunk = [
+        ln for ln in exchanges
+        if re.search(r"hashpartitioning\(__k, \d+\), REPARTITION_BY_COL", ln)
+    ]
+    assert len(by_chunk) == 1, exchanges
+    plan = "\n".join(lines)
+    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert bad not in plan, bad
+    for ln in exchanges:
+        assert "rangepartitioning" not in ln and "SinglePartition" not in ln, ln
+    assert jobs == 7, jobs
 
 
 def test_global_as_of_join_single_range_exchange(spark):

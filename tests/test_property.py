@@ -447,6 +447,55 @@ def test_chunked_running_sum_matches_naive_window(spark, rows):
 
 @given(
     st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", None]),
+            st.one_of(st.none(), st.integers(-20, 50)),
+            st.integers(-3, 3),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    st.sampled_from([["g"], []]),
+    st.sampled_from([1, 8, 1000]),  # order-value chunk width: many .. one chunk
+    st.sampled_from([1, 3, 64]),  # 64: more partitions than rows
+)
+@example(
+    rows=[(None, 1, 1), (None, 1, 2), ("a", 1, 3), (None, None, 4), ("a", None, 5)],
+    groups=["g"],
+    width=1,
+    parts=64,
+)
+@settings(max_examples=10, deadline=None)
+def test_chunked_running_sum_keeps_null_keys(spark, rows, groups, width, parts):
+    """chunked_running_sum == a pure-Python grouped prefix sum over
+    (order value, seq), NULL order values first: every row comes back,
+    those of the NULL group and those whose chunk is NULL included."""
+    from hadoop_fcfs_spark.ops.sort import chunked_running_sum
+
+    data = [(g, o, i, v) for i, (g, o, v) in enumerate(rows)]
+    df = spark.createDataFrame(
+        data, "g string, o long, seq long, v long"
+    ).repartition(parts)
+    got = {
+        r["seq"]: r["running"]
+        for r in chunked_running_sum(
+            df, groups, F.floor(F.col("o") / width).cast("long"), ["o", "seq"], "v"
+        ).collect()
+    }
+    by_group = {}
+    for g, o, i, v in data:
+        by_group.setdefault(g if groups else 0, []).append((o is not None, o or 0, i, v))
+    want = {}
+    for pts in by_group.values():
+        total = 0
+        for _, _, i, v in sorted(pts):
+            total += v
+            want[i] = total
+    assert got == want
+
+
+@given(
+    st.lists(
         st.tuples(st.integers(0, 5), st.one_of(st.none(), st.integers(-5, 5))),
         min_size=1,
         max_size=12,
@@ -2857,25 +2906,48 @@ def _py_ks_group_drift(rows):
     st.lists(
         st.tuples(
             st.sampled_from(["a", "b", "c", None]),
-            st.one_of(st.none(), st.integers(-300, 300)),
+            st.one_of(
+                st.none(),
+                st.integers(-4000, 4000),
+                st.sampled_from([-4, 0, 4, 1024, 1028]),  # ties
+            ),
         ),
         min_size=1,
         max_size=40,
-    )
+    ),
+    st.booleans(),
+    st.sampled_from([1, 3, 7]),
 )
-@example(rows=[("a", 5), ("a", 5), ("a", 7)])  # one group, ties
-@example(rows=[(None, 1), ("b", 1), ("a", None), ("a", 2), ("b", 2)])
+@example(rows=[("a", 5), ("a", 5), ("a", 7)], dbl=False, parts=1)  # one group, ties
+@example(
+    rows=[(None, 1), ("b", 1), ("a", None), ("a", 2), ("b", 2)], dbl=False, parts=3
+)
+# a's sup gap (3/8) sits at 303, strictly between its own values 10 and
+# 600, two 256-wide value chunks apart; at a's own values it is 1/4 at most
+@example(
+    rows=[("a", 10), ("b", 300), ("b", 301), ("b", 302), ("b", 303),
+          ("a", 600), ("a", 601), ("a", 602)],
+    dbl=False,
+    parts=7,
+)
 @settings(max_examples=10, deadline=None)
-def test_ks_group_drift_matches_python_reference_ordered(spark, rows):
-    """ks_group_drift vs a pure-Python KS-D replay on small frames with
-    NULL groups, NULL values, single groups and tied values. Compared
-    as an ordered list: the G-row output is sorted inside its one
-    partition (NULL group first), and oracle parity compares rows
-    without regard to order, so this is the check that locks the order."""
+def test_ks_group_drift_matches_python_reference_ordered(spark, rows, dbl, parts):
+    """ks_group_drift vs a pure-Python KS-D replay on the dense grid,
+    on small frames with NULL groups, NULL values, single groups and
+    tied values, values spread over many 256-wide value chunks (as
+    doubles with fractional parts when ``dbl``: raw / 4), and input in
+    1, 3 or 7 partitions. Compared as an ordered list: the G-row output
+    is sorted inside its one partition (NULL group first), and oracle
+    parity compares rows without regard to order, so this is the check
+    that locks the order."""
     from hadoop_fcfs_spark.caching import release_waypoints
     from hadoop_fcfs_spark.ops.stats import ks_group_drift
 
-    df = spark.createDataFrame(rows, "g string, v long")
+    if dbl:
+        rows = [(g, None if v is None else v / 4) for g, v in rows]
+    df = spark.createDataFrame(
+        rows, f"g string, v {'double' if dbl else 'long'}"
+    ).repartition(parts)
     got = [tuple(r) for r in ks_group_drift(df, "v", "g").collect()]
     release_waypoints()
     assert got == _py_ks_group_drift(rows)
